@@ -19,7 +19,7 @@ from __future__ import annotations
 import uuid
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -196,7 +196,18 @@ class Catalog:
 
     # -- read -----------------------------------------------------------
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self._dir(table))
+        """Scan a table.  On the parquet backend the schema comes from
+        the per-instance cache (insert docstring) once known, so only
+        the first read of a table pays the footer schema-inference
+        job; Delta resolves its schema from the log without a job."""
+        if self.fmt != "parquet":
+            return self.spark.read.format(self.fmt).load(self._dir(table))
+        schema = self._schema_cache.get(table)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(self._dir(table))
+        df = self.spark.read.parquet(self._dir(table))
+        self._schema_cache[table] = df.schema
+        return df
 
     # -- mutations (R9-R12) --------------------------------------------
     def insert(self, table: str, rows: list[dict]) -> int:
@@ -311,10 +322,15 @@ class Catalog:
         tmp = self._dir(f".{table}.{uuid.uuid4().hex[:8]}")
         df.write.mode("overwrite").parquet(tmp)
         staged_swap(self.spark, self._dir(table), tmp)
+        self._schema_cache[table] = df.schema
 
     def update(self, table: str, where: Column, assignments: dict[str, Column]) -> int:
         """UPDATE ... SET ... WHERE (pg_connect.py:365-384), returning
         the affected-row count (the reference's rowcount contract).
+
+        The parquet backend counts the rows where ``where`` is TRUE
+        (a NULL predicate does not count) with an observe() on the
+        rewrite's own write: one scan, no cache.
 
         Delta backend: a transactional in-place UPDATE — only files
         containing matching rows rewrite, vs the full staged-swap of
@@ -325,26 +341,24 @@ class Catalog:
                 condition=where, set=assignments
             )
             return n
-        df = self.read(table).cache()
-        n = df.filter(where).count()
-        updated = df
+        obs = Observation()
+        df = self.read(table).observe(obs, F.count(F.when(where, 1)).alias("n"))
         for col, val in assignments.items():
-            updated = updated.withColumn(col, F.when(where, val).otherwise(F.col(col)))
-        self._rewrite(table, updated)
-        df.unpersist()
-        return n
+            df = df.withColumn(col, F.when(where, val).otherwise(F.col(col)))
+        self._rewrite(table, df)
+        return obs.get["n"]
 
     def delete(self, table: str, where: Column) -> int:
-        """DELETE FROM ... WHERE (pg_connect.py:386-395)."""
+        """DELETE FROM ... WHERE (pg_connect.py:386-395).  Rows whose
+        predicate is NULL are kept, as in SQL."""
         if self.fmt == "delta":
             n = self.read(table).filter(where).count()
             DeltaTable.forPath(self.spark, self._dir(table)).delete(where)
             return n
-        df = self.read(table).cache()
-        n = df.filter(where).count()
-        self._rewrite(table, df.filter(~where))
-        df.unpersist()
-        return n
+        obs = Observation()
+        df = self.read(table).observe(obs, F.count(F.when(where, 1)).alias("n"))
+        self._rewrite(table, df.filter(~F.coalesce(where, F.lit(False))))
+        return obs.get["n"]
 
     # -- ingestion-specific reads (§2.4 A2) -----------------------------
     def last_ext_time(self, asset_id: int) -> datetime | None:
@@ -371,10 +385,17 @@ class Catalog:
         last_ext_time: datetime | None,
         n_rows: int | None = None,
         proc_start_ts: datetime | None = None,
+        *,
+        dq_validation: str = STATUS_NOT_STARTED,
+        data_masking: str = STATUS_NOT_STARTED,
+        data_publish: str = STATUS_NOT_STARTED,
     ) -> None:
         """Run-ledger append (reference insert_record_in_catalog_tbl,
-        dataIngestionUtils.py:234-249): downstream statuses initialized
-        to 'not started' (:240-242), watermark persisted (:247)."""
+        dataIngestionUtils.py:234-249): watermark persisted (:247);
+        stage statuses default to the reference's 'not started'
+        (:240-242).  ``pipeline.run_asset`` appends its row once, with
+        the final statuses: one insert, never a rewrite of the
+        ledger."""
         now = datetime.now()
         self.insert(
             "run_ledger",
@@ -383,9 +404,9 @@ class Catalog:
                     "exec_id": exec_id,
                     "src_sys_id": int(src_sys_id),
                     "asset_id": int(asset_id),
-                    "dq_validation": STATUS_NOT_STARTED,
-                    "data_masking": STATUS_NOT_STARTED,
-                    "data_publish": STATUS_NOT_STARTED,
+                    "dq_validation": dq_validation,
+                    "data_masking": data_masking,
+                    "data_publish": data_publish,
                     "src_file_path": src_file_path,
                     "log_path": None,
                     "proc_start_ts": proc_start_ts or now,
@@ -399,7 +420,9 @@ class Catalog:
     def set_stage_status(self, exec_id: str, stage: str, status: str) -> int:
         """Pipeline-stage status update (dq_validation / data_masking /
         data_publish — the columns Airflow stages flip in the
-        reference's DAG, dl_fmwrk_dag_template.py:60-97)."""
+        reference's DAG, dl_fmwrk_dag_template.py:60-97) on an already
+        committed row.  A full ledger rewrite: ``run_asset`` does not
+        call it, it records each stage's status in its one row."""
         assert stage in ("dq_validation", "data_masking", "data_publish")
         return self.update(
             "run_ledger", F.col("exec_id") == exec_id, {stage: F.lit(status)}

@@ -1,5 +1,5 @@
 """Pipeline driver: run(asset) = ingest → quality-check → mask →
-publish, with per-stage ledger statuses.
+publish, committed as ONE run-ledger row with per-stage statuses.
 
 Replaces the reference's Airflow control plane (SURVEY.md §2.6:
 linear DAG t1>>…>>t6, dl_fmwrk_dag_template.py:39-113; dispatcher
@@ -8,9 +8,14 @@ stage is a function over DataFrames, and the stage statuses are the
 same three ledger columns the reference initializes to 'not started'
 (dataIngestionUtils.py:240-242).
 
-Unlike the reference (broad try/except that still records a catalog
-row on failure — §4.3), stages fail fast and the failure status is
-recorded before re-raising.
+The reference inserts its catalog row before the stages and its
+Airflow tasks flip the statuses one by one.  Here the row — watermark,
+row count and each stage's final status — is appended once, after the
+last stage the run reaches; the ledger is never rewritten.
+Stages fail fast: a failing stage's status is recorded in that row
+and the error re-raised.  A process killed before the commit leaves
+no row, so the ledger watermark has not moved and the next run
+re-extracts the window instead of skipping it.
 """
 
 from __future__ import annotations
@@ -94,34 +99,52 @@ def run_asset(
     ``run_ts`` is the run's LOGICAL timestamp (exec_id + zone paths):
     schedulers pass their tick time so replayed/simulated ticks get
     stable, distinct exec ids; interactive callers default to now.
+
+    Commit point: the run's ledger row is appended once, after the
+    last stage it reaches (also when a stage raises), with the
+    watermark, the landed row count, the run's start time as
+    ``proc_start_ts`` and each stage's status ('not started' for a
+    stage not reached).  A run killed before that commit leaves no
+    row: its window is re-extracted by the next run, not skipped.
     """
-    ts = (run_ts or datetime.now()).strftime("%Y%m%d%H%M%S")
+    started = datetime.now()
+    ts = (run_ts or started).strftime("%Y%m%d%H%M%S")
     exec_id = f"{spec.src_sys_id}_{spec.asset_id}_{ts}"
     raw = os.path.join(work_root, str(spec.asset_id), "init", ts)
     pub = os.path.join(work_root, str(spec.asset_id), "publish", ts)
 
-    run_extraction(
+    plan = run_extraction(
         catalog,
         source_df,
-        src_sys_id=spec.src_sys_id,
         asset_id=spec.asset_id,
         ext_method=spec.ext_method,
         ext_col=spec.ext_col,
         dest_path=raw,
-        exec_id=exec_id,
     )
-    landed = catalog.spark.read.parquet(raw)
-
+    status: dict[str, str] = {}
     try:
-        quality_check(landed, spec)
-        catalog.set_stage_status(exec_id, "dq_validation", "succeeded")
-    except DQError:
-        catalog.set_stage_status(exec_id, "dq_validation", "failed")
-        raise
+        landed = catalog.spark.read.parquet(raw)
+        try:
+            quality_check(landed, spec)
+        except DQError:
+            status["dq_validation"] = "failed"
+            raise
+        status["dq_validation"] = "succeeded"
 
-    masked = mask(landed, spec)
-    catalog.set_stage_status(exec_id, "data_masking", "succeeded")
+        masked = mask(landed, spec)
+        status["data_masking"] = "succeeded"
 
-    publish(masked, pub)
-    catalog.set_stage_status(exec_id, "data_publish", "succeeded")
+        publish(masked, pub)
+        status["data_publish"] = "succeeded"
+    finally:
+        catalog.record_run(
+            exec_id,
+            spec.src_sys_id,
+            spec.asset_id,
+            src_file_path=raw,
+            last_ext_time=plan.hi,
+            n_rows=plan.n_rows,
+            proc_start_ts=started,
+            **status,
+        )
     return exec_id

@@ -17,7 +17,7 @@ max() aggregate, not ORDER BY DESC LIMIT 1 (:136).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from datetime import datetime
 from typing import Any
 
@@ -32,6 +32,7 @@ class ExtractionPlan:
     mode: str  # "full" | "incremental"
     lo: datetime | None  # exclusive
     hi: datetime | None  # inclusive
+    n_rows: int | None = None  # rows landed (set by run_extraction)
 
 
 def probe_max(df: DataFrame, col: str) -> Any:
@@ -69,15 +70,21 @@ def run_extraction(
     catalog: Catalog,
     source_df: DataFrame,
     *,
-    src_sys_id: int,
     asset_id: int,
     ext_method: str,
     ext_col: str | None,
     dest_path: str,
-    exec_id: str | None = None,
     single_file: bool = False,
 ) -> ExtractionPlan:
-    """End-to-end ingest of one asset: plan → land parquet → ledger.
+    """Ingest of one asset: plan → land parquet.  Returns the plan with
+    the landed row count.
+
+    The caller commits the run by appending its ledger row
+    (``catalog.record_run`` with ``last_ext_time=plan.hi``, as
+    ``pipeline.run_asset`` does after its last stage).  Until that
+    commit the ledger watermark is unchanged, so a run that dies
+    before it leaves its window to be re-extracted by the next run,
+    never skipped.
 
     The reference lands `repartition(1)` CSV (dataIngestionUtils.py:
     117-118); the engine default is partitioned parquet — single_file
@@ -95,14 +102,4 @@ def run_extraction(
     df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
     writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
     writer.parquet(dest_path)
-    n_rows = obs.get["n_rows"]
-    ts = datetime.now().strftime("%Y%m%d%H%M%S")
-    catalog.record_run(
-        exec_id=exec_id or f"{src_sys_id}_{asset_id}_{ts}",
-        src_sys_id=src_sys_id,
-        asset_id=asset_id,
-        src_file_path=dest_path,
-        last_ext_time=plan.hi if ext_method == "incremental" else None,
-        n_rows=n_rows,
-    )
-    return plan
+    return replace(plan, n_rows=obs.get["n_rows"])

@@ -54,6 +54,18 @@ def test_insert_update_delete_rowcounts(catalog):
     assert catalog.delete("data_assets", F.col("asset_id") == 0) == 1
     assert catalog.read("data_assets").count() == 4
 
+    # a predicate that matches nothing: rowcount 0, table unchanged
+    before = sorted(map(tuple, catalog.read("data_assets").collect()))
+    nothing = F.col("asset_id") > 100
+    assert catalog.update("data_assets", nothing, {"ext_col": F.lit("x")}) == 0
+    assert catalog.delete("data_assets", nothing) == 0
+    # a NULL predicate (ext_col is NULL on every row) is not a match:
+    # not counted, and the rows are neither updated nor deleted
+    null_pred = F.col("ext_col") == "ts"
+    assert catalog.update("data_assets", null_pred, {"ext_col": F.lit("x")}) == 0
+    assert catalog.delete("data_assets", null_pred) == 0
+    assert sorted(map(tuple, catalog.read("data_assets").collect())) == before
+
 
 def test_run_ledger_watermark(catalog):
     from datetime import datetime
@@ -429,7 +441,9 @@ def test_insert_arrow_fast_path_values_and_fallback(catalog, spark, tmp_path):
     got = catalog.read("curation_ledger").first()
     assert got["stage"] == 3 and got["n_in"] == 10 and got["out_path"] is None
     assert got["updated_ts"] == ts  # micros exact under session UTC
-    sch = catalog.read("curation_ledger").schema
+    # a fresh instance infers the schema from the files (``catalog``
+    # reads with the schema it cached at create)
+    sch = Catalog(spark, root).read("curation_ledger").schema
     assert dict((f.name, f.dataType.simpleString()) for f in sch.fields)[
         "updated_ts"
     ] == "timestamp"

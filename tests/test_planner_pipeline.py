@@ -5,6 +5,7 @@ idempotent."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta
 
 import pytest
@@ -61,33 +62,33 @@ def test_plan_full_vs_incremental(spark):
 
 def test_incremental_rerun_extracts_nothing_new(spark, catalog, tmp_path):
     """Run 1 (bootstrap) lands everything and persists hi; run 2 with
-    no new data lands zero rows; appended data lands exactly once."""
+    no new data lands zero rows; appended data lands exactly once.
+    Each extraction is committed with ``record_run``, as run_asset
+    commits its run."""
     ev = load(spark, SF, "events").cache()
-    land1 = str(tmp_path / "land1")
-    plan1 = run_extraction(
-        catalog, ev, src_sys_id=1, asset_id=11, ext_method="incremental",
-        ext_col="ts", dest_path=land1,
-    )
+
+    def extract_and_commit(src, name):
+        dest = str(tmp_path / name)
+        plan = run_extraction(
+            catalog, src, asset_id=11, ext_method="incremental",
+            ext_col="ts", dest_path=dest,
+        )
+        catalog.record_run(f"1_11_{name}", 1, 11, dest, plan.hi, plan.n_rows)
+        return dest, plan
+
+    land1, plan1 = extract_and_commit(ev, "land1")
     assert plan1.mode == "full"
-    assert spark.read.parquet(land1).count() == ev.count()
+    assert spark.read.parquet(land1).count() == ev.count() == plan1.n_rows
     assert catalog.last_ext_time(11) == plan1.hi
 
-    land2 = str(tmp_path / "land2")
-    plan2 = run_extraction(
-        catalog, ev, src_sys_id=1, asset_id=11, ext_method="incremental",
-        ext_col="ts", dest_path=land2,
-    )
+    land2, plan2 = extract_and_commit(ev, "land2")
     assert plan2.mode == "incremental"
     assert spark.read.parquet(land2).count() == 0  # nothing new
 
     # simulate late-arriving source rows after the watermark
     extra = ev.withColumn("ts", F.col("ts") + F.expr("INTERVAL 100 DAYS"))
     grown = ev.unionByName(extra)
-    land3 = str(tmp_path / "land3")
-    plan3 = run_extraction(
-        catalog, grown, src_sys_id=1, asset_id=11, ext_method="incremental",
-        ext_col="ts", dest_path=land3,
-    )
+    land3, plan3 = extract_and_commit(grown, "land3")
     assert plan3.mode == "incremental"
     assert spark.read.parquet(land3).count() == ev.count()  # only the new rows
     assert catalog.last_ext_time(11) == plan3.hi
@@ -147,3 +148,139 @@ def test_run_asset_dq_failure_recorded(spark, catalog, tmp_path):
     )
     assert row["dq_validation"] == "failed"  # fail fast, status recorded
     assert row["data_publish"] == "not started"
+
+
+def _ledger_rows(catalog, asset_id):
+    return (
+        catalog.read("run_ledger").filter(F.col("asset_id") == asset_id).collect()
+    )
+
+
+def test_run_asset_commits_one_ledger_row_per_run(spark, catalog, tmp_path):
+    ev = load(spark, SF, "events")
+    late = ev.withColumn("ts", F.col("ts") + F.expr("INTERVAL 100 DAYS"))
+    spec = AssetSpec(
+        asset_id=23, src_sys_id=3, ext_method="incremental", ext_col="ts"
+    )
+    zone = str(tmp_path / "zone")
+    started = datetime.now()
+    e1 = run_asset(catalog, spec, ev, zone, run_ts=datetime(2030, 1, 1))
+    assert [r["exec_id"] for r in _ledger_rows(catalog, 23)] == [e1]
+    e2 = run_asset(
+        catalog, spec, ev.unionByName(late), zone, run_ts=datetime(2030, 1, 2)
+    )
+    rows = {r["exec_id"]: r for r in _ledger_rows(catalog, 23)}
+    assert sorted(rows) == [e1, e2]
+    assert rows[e2]["last_ext_time"] == probe_max(late, "ts")
+    for r in rows.values():
+        assert r["n_rows"] == ev.count()
+        assert r["dq_validation"] == r["data_masking"] == "succeeded"
+        assert r["data_publish"] == "succeeded"
+        # proc_start_ts is the run's start, before the commit
+        assert started <= r["proc_start_ts"] <= r["created_ts"]
+
+
+def test_run_asset_publish_failure_row(spark, catalog, tmp_path, monkeypatch):
+    """A stage exception still commits the row: earlier stages
+    succeeded, the failing one 'not started', the watermark set."""
+    from aws_datalake_framework_ingestion_spark import pipeline
+
+    def boom(df, dest):
+        raise RuntimeError("publish down")
+
+    monkeypatch.setattr(pipeline, "publish", boom)
+    ev = load(spark, SF, "events")
+    spec = AssetSpec(
+        asset_id=24, src_sys_id=3, ext_method="incremental", ext_col="ts"
+    )
+    with pytest.raises(RuntimeError, match="publish down"):
+        run_asset(catalog, spec, ev, str(tmp_path / "zone"))
+    (row,) = _ledger_rows(catalog, 24)
+    assert row["dq_validation"] == "succeeded"
+    assert row["data_masking"] == "succeeded"
+    assert row["data_publish"] == "not started"
+    assert row["last_ext_time"] == probe_max(ev, "ts")
+    assert catalog.last_ext_time(24) == row["last_ext_time"]
+
+
+def test_run_asset_uncommitted_window_is_reextracted(
+    spark, catalog, tmp_path, monkeypatch
+):
+    """A run that dies after publishing but before its ledger commit
+    leaves the watermark where it was, so the next run re-extracts
+    and publishes that window's rows, each exactly once."""
+    from aws_datalake_framework_ingestion_spark import pipeline
+
+    ev = load(spark, SF, "events")
+    spec = AssetSpec(
+        asset_id=25, src_sys_id=3, ext_method="incremental", ext_col="ts"
+    )
+    zone = tmp_path / "zone"
+    published = []
+    real_publish = pipeline.publish
+
+    def spy(df, dest):
+        published.append(dest)
+        real_publish(df, dest)
+
+    def killed(*args, **kwargs):
+        raise SystemExit("killed before the ledger commit")
+
+    monkeypatch.setattr(pipeline, "publish", spy)
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "record_run", killed)
+        with pytest.raises(SystemExit):
+            run_asset(catalog, spec, ev, str(zone), run_ts=datetime(2030, 1, 1))
+    assert len(published) == 1  # the crash came after publish
+    assert catalog.last_ext_time(25) is None
+    assert _ledger_rows(catalog, 25) == []
+
+    e2 = run_asset(catalog, spec, ev, str(zone), run_ts=datetime(2030, 1, 2))
+    pub = spark.read.parquet(published[-1])
+    assert pub.count() == pub.select("event_id").distinct().count() == ev.count()
+    (row,) = _ledger_rows(catalog, 25)
+    assert row["exec_id"] == e2 and row["last_ext_time"] == probe_max(ev, "ts")
+
+
+#: Spark jobs of one warm incremental ``run_asset`` tick over a small
+#: in-memory source (measured; equality, so an added job — e.g. a
+#: Spark-side ledger rewrite — fails here, and a removed one must
+#: re-pin the count)
+RUN_ASSET_TICK_JOBS = 10
+
+
+def test_run_asset_tick_job_count(spark, catalog, tmp_path):
+    def source(n):
+        return spark.createDataFrame(
+            [
+                (i, datetime(2030, 1, 1) + timedelta(seconds=i), f"u{i}@x")
+                for i in range(n)
+            ],
+            "event_id long, ts timestamp, email string",
+        )
+
+    spec = AssetSpec(
+        asset_id=26, src_sys_id=3, ext_method="incremental", ext_col="ts",
+        mask_cols=("email",), dq_not_null=("event_id", "ts"),
+        dq_unique=("event_id",),
+    )
+    zone = str(tmp_path / "zone")
+    run_asset(catalog, spec, source(50), zone, run_ts=datetime(2030, 1, 1))
+    ledger_dir = tmp_path / "cat" / "run_ledger"
+    before = set(os.listdir(ledger_dir))
+
+    sc = spark.sparkContext
+    group = f"run_asset_tick_{os.getpid()}"
+    sc.setJobGroup(group, "one warm incremental run_asset tick")
+    try:
+        run_asset(
+            catalog, spec, source(100), zone, run_ts=datetime(2030, 1, 2)
+        )
+    finally:
+        sc.setJobGroup("", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    added = set(os.listdir(ledger_dir)) - before
+    assert len(added) == 1 and next(iter(added)).endswith("-arrow.parquet")
+    assert catalog.last_ext_time(26) == datetime(2030, 1, 1, 0, 1, 39)
+    assert n_jobs == RUN_ASSET_TICK_JOBS, n_jobs
