@@ -9,9 +9,7 @@ rebuild of the reference's Postgres tables (FIXTURES.md §B):
 
 Storage is partition-free parquet under a root directory with a
 single-writer versioned-rewrite protocol for UPDATE/DELETE (metadata
-tables are KB-scale; full rewrite is the right cost).  With Delta on
-the classpath the same API maps onto MERGE/UPDATE/DELETE — gated
-import below.
+tables are KB-scale; full rewrite is the right cost).
 """
 
 from __future__ import annotations
@@ -22,13 +20,6 @@ from datetime import datetime
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # Delta gives ACID + MERGE if its jars are present (not in v1 image)
-    from delta.tables import DeltaTable  # noqa: F401
-
-    HAVE_DELTA = True
-except Exception:
-    HAVE_DELTA = False
 
 SOURCE_SYSTEMS_SCHEMA = T.StructType(
     [
@@ -101,27 +92,14 @@ class Catalog:
     """Parquet-backed metadata catalog with the reference DAL's
     mutation surface (INSERT/UPDATE/DELETE/TRUNCATE/CREATE/DROP).
 
-    ``fmt`` selects the storage backend: ``"parquet"`` (default —
-    always available, single-writer staged-swap mutations) or
-    ``"delta"`` (requires delta-spark on the classpath; UPDATE/DELETE
-    become transactional ``DeltaTable`` operations instead of dataset
-    rewrites, mapping 1:1 onto the reference's Postgres row mutations,
-    pg_connect.py:365-395).  The Delta path is import-gated the same
-    way the multimodal codecs are: constructing with fmt="delta" when
-    delta-spark is absent raises immediately rather than failing later.
+    UPDATE/DELETE are single-writer staged-swap rewrites of the whole
+    table (``_rewrite``); they keep the reference's rowcount contract
+    (pg_connect.py:365-395).
     """
 
-    def __init__(self, spark: SparkSession, root: str, fmt: str = "parquet"):
-        if fmt not in ("parquet", "delta"):
-            raise ValueError(f"unsupported catalog format: {fmt!r}")
-        if fmt == "delta" and not HAVE_DELTA:
-            raise RuntimeError(
-                "fmt='delta' requires the delta-spark package on the "
-                "classpath (not bundled in this environment)"
-            )
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.fmt = fmt
         # per-instance table-schema cache (insert docstring); DDL
         # invalidates entries
         self._schema_cache: dict[str, T.StructType] = {}
@@ -149,8 +127,6 @@ class Catalog:
         d = P(self._dir(table))
         if not fs.exists(d) or not fs.getFileStatus(d).isDirectory():
             return False
-        if self.fmt == "delta":
-            return fs.exists(P(f"{self._dir(table)}/_delta_log"))
         it = fs.listFiles(d, True)
         while it.hasNext():
             if it.next().getPath().getName().endswith(".parquet"):
@@ -163,7 +139,7 @@ class Catalog:
         empty parquet dataset with an explicit schema."""
         schema = schema or SCHEMAS[table]
         empty = self.spark.createDataFrame([], schema)
-        empty.write.format(self.fmt).mode("overwrite").save(self._dir(table))
+        empty.write.mode("overwrite").parquet(self._dir(table))
         self._schema_cache[table] = schema
 
     def create_all(self) -> None:
@@ -196,12 +172,9 @@ class Catalog:
 
     # -- read -----------------------------------------------------------
     def read(self, table: str) -> DataFrame:
-        """Scan a table.  On the parquet backend the schema comes from
-        the per-instance cache (insert docstring) once known, so only
-        the first read of a table pays the footer schema-inference
-        job; Delta resolves its schema from the log without a job."""
-        if self.fmt != "parquet":
-            return self.spark.read.format(self.fmt).load(self._dir(table))
+        """Scan a table.  The schema comes from the per-instance cache
+        (insert docstring) once known, so only the first read of a
+        table pays the footer schema-inference job."""
         schema = self._schema_cache.get(table)
         if schema is not None:
             return self.spark.read.schema(schema).parquet(self._dir(table))
@@ -242,10 +215,10 @@ class Catalog:
                 else SCHEMAS[table]
             )
             self._schema_cache[table] = schema
-        if self.fmt == "parquet" and self._insert_arrow(table, rows, schema):
+        if self._insert_arrow(table, rows, schema):
             return len(rows)
         df = self.spark.createDataFrame([tuple(r.get(f.name) for f in schema) for r in rows], schema)
-        df.coalesce(1).write.format(self.fmt).mode("append").save(self._dir(table))
+        df.coalesce(1).write.mode("append").parquet(self._dir(table))
         return len(rows)
 
     #: Spark→Arrow type mapping for the driver-side append fast path.
@@ -313,10 +286,9 @@ class Catalog:
 
     def _rewrite(self, table: str, df: DataFrame) -> None:
         """Versioned rewrite: write to a staging dir, swap atomically
-        (single-writer).  Delta replaces this with a transactional op.
-        The swap goes through the Hadoop FS API (scheme-agnostic);
-        rename atomicity per filesystem is documented in SCALING.md
-        §"Object-store (S3A) semantics"."""
+        (single-writer).  The swap goes through the Hadoop FS API
+        (scheme-agnostic); rename atomicity per filesystem is
+        documented in SCALING.md §"Object-store (S3A) semantics"."""
         from .sources.files import staged_swap
 
         tmp = self._dir(f".{table}.{uuid.uuid4().hex[:8]}")
@@ -328,19 +300,9 @@ class Catalog:
         """UPDATE ... SET ... WHERE (pg_connect.py:365-384), returning
         the affected-row count (the reference's rowcount contract).
 
-        The parquet backend counts the rows where ``where`` is TRUE
-        (a NULL predicate does not count) with an observe() on the
-        rewrite's own write: one scan, no cache.
-
-        Delta backend: a transactional in-place UPDATE — only files
-        containing matching rows rewrite, vs the full staged-swap of
-        the parquet backend."""
-        if self.fmt == "delta":
-            n = self.read(table).filter(where).count()
-            DeltaTable.forPath(self.spark, self._dir(table)).update(
-                condition=where, set=assignments
-            )
-            return n
+        Counts the rows where ``where`` is TRUE (a NULL predicate does
+        not count) with an observe() on the rewrite's own write: one
+        scan, no cache."""
         obs = Observation()
         df = self.read(table).observe(obs, F.count(F.when(where, 1)).alias("n"))
         for col, val in assignments.items():
@@ -351,10 +313,6 @@ class Catalog:
     def delete(self, table: str, where: Column) -> int:
         """DELETE FROM ... WHERE (pg_connect.py:386-395).  Rows whose
         predicate is NULL are kept, as in SQL."""
-        if self.fmt == "delta":
-            n = self.read(table).filter(where).count()
-            DeltaTable.forPath(self.spark, self._dir(table)).delete(where)
-            return n
         obs = Observation()
         df = self.read(table).observe(obs, F.count(F.when(where, 1)).alias("n"))
         self._rewrite(table, df.filter(~F.coalesce(where, F.lit(False))))

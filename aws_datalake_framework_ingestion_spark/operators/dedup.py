@@ -208,42 +208,26 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = 3,
     num_hashes: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """One row per doc: array<bigint> MinHash signature.
 
     Signature building never leaves the row — no explode, no groupBy,
-    no shuffle at any corpus size.  Two interchangeable row-local
-    implementations (bit-identical, asserted in tests):
-
-    * ``impl="arrow"`` (default): Arrow-batched ``mapInPandas`` whose
-      kernel is ONE numpy broadcast ``(a·h32+b) mod P`` over the
-      batch's concatenated shingles + a segmented min — measured ~8×
-      faster than the expression path (Catalyst evaluates
-      higher-order-function lambdas interpreted, ~1 ms/doc at 64
-      hashes; numpy does the same 10k fused multiplies in ~20 µs).
-      This is the same "vectorized Python beats interpreted JVM
-      expression trees" call as the IVF matmul (similarity.py).
-    * ``impl="expr"``: pure Catalyst ``aggregate``/``zip_with`` fold —
-      zero Python, kept as the reference semantics and for engines
-      where Arrow transfer is unavailable.
+    no shuffle at any corpus size.  The kernel is an Arrow-batched
+    ``mapInPandas``: ONE numpy broadcast ``(a·h32+b) mod P`` over the
+    batch's concatenated shingles + a segmented min — measured ~8×
+    faster than a Catalyst ``aggregate``/``zip_with`` fold (Catalyst
+    evaluates higher-order-function lambdas interpreted, ~1 ms/doc at
+    64 hashes; numpy does the same 10k fused multiplies in ~20 µs).
+    This is the same "vectorized Python beats interpreted JVM
+    expression trees" call as the IVF matmul (similarity.py).  The
+    expression fold is kept in tests as the bit-identity reference.
     """
     arrs = doc_shingle_hash_arrays(df, id_col, text_col, k)
-    return sig_from_arrays(arrs, id_col, num_hashes, impl)
+    return sig_from_arrays(arrs, id_col, num_hashes)
 
 
-def sig_from_arrays(
-    arrs: DataFrame, id_col: str, num_hashes: int, impl: str = "arrow"
-) -> DataFrame:
-    """(id, sh_arr) → (id, sig).  See minhash_signatures for impls."""
-    if impl == "expr":
-        return arrs.select(
-            F.col(id_col),
-            _sig_from_array(F.col("sh_arr"), num_hashes).alias("sig"),
-        )
-    if impl != "arrow":
-        raise ValueError(f"minhash impl must be arrow|expr, got {impl!r}")
-
+def sig_from_arrays(arrs: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """(id, sh_arr) → (id, sig).  See minhash_signatures."""
     import numpy as np
     import pandas as pd
 
@@ -274,36 +258,6 @@ def sig_from_arrays(
             )
 
     return arrs.mapInPandas(gen, schema=f"{id_col} long, sig array<bigint>")
-
-
-def _sig_from_array(sh_arr: Column, num_hashes: int) -> Column:
-    """array<bigint> MinHash signature from a shingle-hash array.
-
-    One pass: acc starts at [P]*n (P exceeds every residue) and each
-    shingle h contributes min(acc_i, (a_i·h32 + b_i) mod P) via
-    zip_with over a literal (a, b) parameter array.  h is folded into
-    [0, 2^32) first so a·h32 + b stays under 2^63 (ANSI mode: no
-    bigint overflow)."""
-    params = F.array(
-        *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
-            )
-            for a, b in _hash_params(num_hashes)
-        ]
-    )
-    init = F.array_repeat(F.lit(_P).cast("long"), num_hashes)
-    return F.aggregate(
-        sh_arr,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            params,
-            lambda m, p: F.least(
-                m, (p["a"] * F.pmod(h, F.lit(2**32)) + p["b"]) % F.lit(_P)
-            ),
-        ),
-    )
 
 
 def minhash_lsh_candidates(
@@ -488,99 +442,57 @@ def simhash64(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """64-bit SimHash per doc from token xxhash64 bits weighted by
     token frequency.  Returns (id, simhash bigint, simhash_hex).
 
-    ``impl="arrow"`` (default): ZERO-shuffle row-local path — token
-    hashes computed JVM-side (`transform`+`xxhash64`), then one numpy
-    bit-unpack + segmented sum per Arrow batch.  Duplicate tokens
-    contribute once per occurrence, which equals the weighted
-    per-distinct-token sum, and all sums are exact integers with the
-    same `> 0` sign rule — bit-identical to the expression path
-    (asserted in tests).  At 100 TB this removes the
-    O(docs × distinct tokens) shuffle entirely.
-
-    ``impl="expr"``: explode tokens → (doc, token_hash, weight) →
-    64 conditional-sum aggregates → sign bits recombined with bitwise
-    OR.  Shuffle is O(docs × distinct tokens), map-combined.
+    ZERO-shuffle row-local path — token hashes computed JVM-side
+    (`transform`+`xxhash64`), then one numpy bit-unpack + segmented
+    sum per Arrow batch.  Duplicate tokens contribute once per
+    occurrence, which equals the weighted per-distinct-token sum, and
+    all sums are exact integers with the same `> 0` sign rule —
+    bit-identical to an explode → groupBy → 64 conditional-sum
+    aggregate, whose shuffle is O(docs × distinct tokens) (kept in
+    tests as the reference).  At 100 TB this removes that shuffle
+    entirely.
     """
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        base = df.select(
-            F.col(id_col),
-            F.transform(tokens_col(text_col), lambda t: F.xxhash64(t)).alias(
-                "_th"
-            ),
-        )
-        SH = np.arange(64, dtype=np.uint64)
-        POW = np.uint64(1) << SH
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ths = pdf["_th"].to_numpy()
-                lens = np.fromiter(
-                    (len(a) for a in ths), dtype=np.int64, count=len(ths)
-                )
-                flat = np.concatenate(ths).astype(np.int64).astype(np.uint64)
-                contrib = (
-                    2 * ((flat[:, None] >> SH) & np.uint64(1)).astype(np.int64)
-                    - 1
-                )  # (total, 64) of ±1
-                starts = np.zeros(len(lens), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                sums = np.add.reduceat(contrib, starts, axis=0)  # (n, 64)
-                words = ((sums > 0).astype(np.uint64) * POW).sum(
-                    axis=1, dtype=np.uint64
-                )
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col], "simhash": words.view(np.int64)}
-                )
-
-        sig_df = base.mapInPandas(gen, schema=f"{id_col} long, simhash bigint")
-        return sig_df.withColumn(
-            "simhash_hex", F.lpad(F.hex("simhash"), 16, "0")
-        )
-    if impl != "expr":
-        raise ValueError(f"simhash impl must be arrow|expr, got {impl!r}")
-    toks = (
-        _spread(df, id_col)
-        .select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .select(id_col, F.xxhash64("tok").alias("th"), "w")
-    )
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("th"), i).bitwiseAND(F.lit(1)) == 1, F.col("w"))
-            .otherwise(-F.col("w"))
-        ).alias(f"b{i}")
-        for i in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    sums = F.array(*[f"b{i}" for i in range(64)])
-    # bit i as a literal power of two (bit 63 = long min value)
-    pow2 = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("bigint")
-            for i in range(64)
-        ]
-    )
-    sig = F.aggregate(
-        F.zip_with(
-            sums,
-            pow2,
-            lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("bigint")),
+    base = df.select(
+        F.col(id_col),
+        F.transform(tokens_col(text_col), lambda t: F.xxhash64(t)).alias(
+            "_th"
         ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc.bitwiseOR(x),
     )
-    return agg.select(F.col(id_col), sig.alias("simhash")).withColumn(
+    SH = np.arange(64, dtype=np.uint64)
+    POW = np.uint64(1) << SH
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ths = pdf["_th"].to_numpy()
+            lens = np.fromiter(
+                (len(a) for a in ths), dtype=np.int64, count=len(ths)
+            )
+            flat = np.concatenate(ths).astype(np.int64).astype(np.uint64)
+            contrib = (
+                2 * ((flat[:, None] >> SH) & np.uint64(1)).astype(np.int64)
+                - 1
+            )  # (total, 64) of ±1
+            starts = np.zeros(len(lens), dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            sums = np.add.reduceat(contrib, starts, axis=0)  # (n, 64)
+            words = ((sums > 0).astype(np.uint64) * POW).sum(
+                axis=1, dtype=np.uint64
+            )
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "simhash": words.view(np.int64)}
+            )
+
+    sig_df = base.mapInPandas(gen, schema=f"{id_col} long, simhash bigint")
+    return sig_df.withColumn(
         "simhash_hex", F.lpad(F.hex("simhash"), 16, "0")
     )
 

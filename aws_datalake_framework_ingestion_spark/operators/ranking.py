@@ -124,6 +124,13 @@ def top_k_ranked(
     never plans ``Exchange SinglePartition`` into a WindowExec).
     ``order_cols`` must include tie-breaks making the order total, or
     the k-boundary itself is nondeterministic.
+
+    The returned frame is fully lazy — nothing pins the result.  Each
+    action on it re-runs the whole upstream, so a caller acting more
+    than once pays the upstream once per action, and with a non-total
+    order or a nondeterministic upstream two actions can see different
+    top-k sets.  Such a caller should persist or checkpoint the result
+    itself.
     """
     cols = _cols(order_cols)
     # r15 (VERDICT r14 item 7 — combine the model-materialization

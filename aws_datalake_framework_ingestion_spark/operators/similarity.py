@@ -133,22 +133,19 @@ def _bucketed(
     bits: int,
     dim: int,
     prefix: str,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, vec, norm, table, bucket) rows — one per (row, table).
 
     Fails fast on dimension mismatch: a vector shorter/longer than the
-    plane dim would silently null-pad in zip_with and degrade bucket
-    quality — raise instead.
+    plane dim would silently degrade bucket quality — raise instead.
 
-    ``impl="arrow"`` (default) computes ALL table buckets in one Arrow
-    batch: a single (n×dim)·(dim×L·b) numpy matmul replaces L·b
-    interpreted zip_with dots per row (the Catalyst higher-order fold
-    evaluates ~4k multiplies/row interpreted — measured the dominant
-    cost of every hyperplane-LSH query).  ``impl="expr"`` is the
-    pure-Catalyst reference path.  Sign bits can differ between the two
-    only for dots within float rounding of zero — bucket recall is
-    asserted in tests for both.
+    ALL table buckets come from one Arrow batch: a single
+    (n×dim)·(dim×L·b) numpy matmul replaces L·b interpreted zip_with
+    dots per row (the Catalyst higher-order fold of
+    ``lsh_table_buckets`` evaluates ~4k multiplies/row interpreted —
+    measured the dominant cost of every hyperplane-LSH query).  Sign
+    bits can differ from that fold only for dots within float rounding
+    of zero — tests assert the two agree on the fixture.
 
     Output is deliberately SLIM — (id, table, bucket) only.  Vectors
     re-join by id after the candidate pairs are deduped, so the bucket
@@ -156,30 +153,6 @@ def _bucketed(
     (measured 3-5× on the KNN shape, and at 100 TB it is the
     difference between shuffling 24 B and ~0.5 KB per candidate).
     """
-    if impl == "expr":
-        checked = df.withColumn(
-            vec_col,
-            F.when(F.size(F.col(vec_col)) == dim, F.col(vec_col)).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(f"lsh: embedding dim != configured dim={dim} (got "),
-                        F.size(F.col(vec_col)).cast("string"),
-                        F.lit(")"),
-                    )
-                )
-            ),
-        )
-        base = checked.withColumn(
-            "_tb", F.explode(lsh_table_buckets(vec_col, num_tables, bits, dim))
-        )
-        return base.select(
-            F.col(id_col).alias(f"{prefix}id"),
-            F.col("_tb.t").alias(f"{prefix}t"),
-            F.col("_tb.b").alias(f"{prefix}b"),
-        )
-    if impl != "arrow":
-        raise ValueError(f"lsh impl must be arrow|expr, got {impl!r}")
-
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     P = np.asarray(_planes(num_tables * bits, dim), dtype=np.float64)  # (L·b, dim)

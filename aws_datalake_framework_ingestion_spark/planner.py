@@ -74,7 +74,6 @@ def run_extraction(
     ext_method: str,
     ext_col: str | None,
     dest_path: str,
-    single_file: bool = False,
 ) -> ExtractionPlan:
     """Ingest of one asset: plan → land parquet.  Returns the plan with
     the landed row count.
@@ -87,9 +86,7 @@ def run_extraction(
     never skipped.
 
     The reference lands `repartition(1)` CSV (dataIngestionUtils.py:
-    117-118); the engine default is partitioned parquet — single_file
-    only when one artifact is demanded (and then via coalesce, which
-    skips the reference's full shuffle).
+    117-118); the engine lands partitioned parquet.
     """
     last_wm = (
         catalog.last_ext_time(asset_id) if ext_method == "incremental" else None
@@ -100,6 +97,5 @@ def run_extraction(
     # 100 TB for one ledger integer)
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    writer = (df.coalesce(1) if single_file else df).write.mode("overwrite")
-    writer.parquet(dest_path)
+    df.write.mode("overwrite").parquet(dest_path)
     return replace(plan, n_rows=obs.get["n_rows"])

@@ -33,7 +33,6 @@ transaction analog (R19, catalog.py).
 
 from __future__ import annotations
 
-import os
 import re
 import time
 import uuid
@@ -45,26 +44,20 @@ from .manifest import _read_text, _write_text_atomic
 
 LATEST = "_LATEST"
 
-# Publish file-layout knobs (r15, VERDICT r14 item 2).  r14 routed
-# EVERY publish through a REBALANCE hint (guide §6 output sizing) —
-# right for big segments, but the extra exchange is one more
-# sequential stage-job per publish, and a 3-row delta segment doesn't
-# need AQE to coalesce it; the driver measured the append gate 1.6×
-# slower at both core counts.  Policy (env-tunable, data-derived —
-# never a core-count constant):
-#   auto   — Catalyst's optimizedPlan size ESTIMATE picks the layout:
-#            ≤ threshold → coalesce(1) (single file, NARROW — no
-#            exchange, no extra stage); above (or unknown) →
-#            REBALANCE (advisory-sized files, the 100 TB posture).
-#            Estimates only over-state (Filter passes its child's
-#            size through), so a small estimate is reliably small,
-#            and a big-source delta conservatively keeps REBALANCE.
-#   always / never — force one layout (A/B harnesses, deployments
-#            with their own compaction).
-_PUBLISH_LAYOUT_ENV = "SPARK_GRAFT_PUBLISH_REBALANCE"
-_SMALL_PUBLISH_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PUBLISH_BYTES", str(64 * 1024 * 1024))
-)
+# Publish file layout (r15, VERDICT r14 item 2).  r14 routed EVERY
+# publish through a REBALANCE hint (guide §6 output sizing) — right
+# for big segments, but the extra exchange is one more sequential
+# stage-job per publish, and a 3-row delta segment doesn't need AQE to
+# coalesce it; the append gate measured 1.6× slower at both core
+# counts.  The policy is data-derived, never a core-count
+# constant: Catalyst's optimizedPlan size ESTIMATE picks the layout —
+# ≤ _SMALL_PUBLISH_BYTES → coalesce(1) (single file, NARROW — no
+# exchange, no extra stage); above (or unknown) → REBALANCE
+# (advisory-sized files, the 100 TB posture).  Estimates only
+# over-state (Filter passes its child's size through), so a small
+# estimate is reliably small, and a big-source delta conservatively
+# keeps REBALANCE.
+_SMALL_PUBLISH_BYTES = 64 * 1024 * 1024
 
 
 def _estimated_plan_bytes(df: DataFrame) -> int | None:
@@ -80,13 +73,9 @@ def _estimated_plan_bytes(df: DataFrame) -> int | None:
 
 def sized_for_publish(df: DataFrame) -> DataFrame:
     """Apply the publish file-layout policy above to ``df``."""
-    mode = os.environ.get(_PUBLISH_LAYOUT_ENV, "auto")
-    if mode == "never":
-        return df
-    if mode != "always":
-        est = _estimated_plan_bytes(df)
-        if est is not None and est <= _SMALL_PUBLISH_BYTES:
-            return df.coalesce(1)
+    est = _estimated_plan_bytes(df)
+    if est is not None and est <= _SMALL_PUBLISH_BYTES:
+        return df.coalesce(1)
     return df.hint("rebalance")
 # 5+ digits: %05d zero-pads for readability but GROWS past 99999 —
 # the reader regex must keep such versions visible (int sort, not

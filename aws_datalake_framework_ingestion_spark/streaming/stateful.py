@@ -54,58 +54,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running totals on Spark 4's arbitrary-state
-    API v2 (``transformWithStateInPandas`` — StatefulProcessor with
-    named state variables, optional TTL and timers).  Functionally
-    identical to :func:`running_user_totals`; v2 adds composite state
-    (value/list/map per key), state TTL, and timer callbacks, which is
-    where a production TTL-expiring session store would live.
-
-    Import-gated: the API requires protobuf at runtime, which this
-    container does not ship (probed 2026-08-14 — same posture as the
-    Delta backend).  The test is skip-marked accordingly and asserts
-    bit-equality with the v1 operator when the dependency is present.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming import StatefulProcessor
-    except ImportError as exc:  # pragma: no cover - environment probe
-        raise ImportError(
-            "transformWithStateInPandas requires protobuf, which is not "
-            "installed in this environment"
-        ) from exc
-
-    class _TotalsProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._state = handle.getValueState(
-                "totals", "n bigint, total double"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                n, total = self._state.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_TotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

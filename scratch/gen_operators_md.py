@@ -108,42 +108,6 @@ def main() -> None:
         "oracle (this line is generated by scratch/gen_operators_md.py; "
         "a test asserts it equals the live registry)."
     )
-    # Delta probe line is regenerated each run too (r5 verdict item 7 /
-    # r6 item 5: the hand-written "round 2" stamp went stale — probe
-    # delta-spark NOW and stamp the round this script actually ran in,
-    # derived from the newest driver CORRECTNESS file + 1).
-    import importlib.util
-
-    cur_round = max([0] + [
-        int(m.group(1))
-        for p in glob.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r(\d+)", os.path.basename(p)))
-    ]) + 1
-    has_delta = importlib.util.find_spec("delta") is not None
-    delta_line = (
-        f"**Delta Lake probe (round {cur_round}):** `delta-spark` is "
-        + ("PRESENT — the Catalog(fmt=\"delta\") path can be exercised "
-           "live; un-skip tests/test_delta.py."
-           if has_delta else
-           "NOT in this container")
-    )
-    if not has_delta:
-        delta_line += (
-            "\nand installs are disallowed, so the R11/R12/R19 mutation "
-            "surface stays\non the atomic staged-swap path "
-            "(`catalog._rewrite`).  On a cluster\nwith Delta available "
-            "the same interface maps 1:1 to `UPDATE`/`DELETE`/\n"
-            "`MERGE INTO` — the swap is isolated behind `Catalog`, so "
-            "the backend\nswitch touches one class."
-        )
-    src = re.sub(
-        r"\*\*Delta Lake probe \(round \d+\):\*\*.*?(?=\n\n)",
-        delta_line,
-        src,
-        count=1,
-        flags=re.S,
-    )
-
     lines_out = []
     replaced = False
     for ln in src.splitlines():

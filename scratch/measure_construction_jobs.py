@@ -17,7 +17,12 @@ not ≤ — so a plan change that reduces jobs must regenerate the pin
 and a stale-high ceiling can't mask a later +N regression (VERDICT
 r7 item 5).
 
-Run from /root/repo:  python3 scratch/measure_construction_jobs.py
+The session is local[8] with 8 shuffle partitions, the size of the
+test session (tests/conftest.py): graph_cc and ns_dedup_clusters launch
+a different number of construction jobs at other core counts, so the
+pins are only valid at that size, whatever the host's core count.
+
+Run from the repository root:  python3 scratch/measure_construction_jobs.py
 """
 
 from __future__ import annotations
@@ -34,7 +39,9 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 def main() -> None:
-    spark = get_session(app_name="construction_jobs")
+    spark = get_session(
+        app_name="construction_jobs", cpus=8, shuffle_partitions=8
+    )
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 

@@ -89,22 +89,86 @@ def test_bigram_counts_topk_deterministic(spark, docs):
     assert all(x["n"] >= y["n"] for x, y in zip(a, a[1:]))
 
 
+def _sig_from_array(sh_arr, num_hashes: int):
+    """array<bigint> MinHash signature from a shingle-hash array — the
+    Catalyst reference fold for the Arrow kernel in
+    ``dedup.sig_from_arrays``.
+
+    One pass: acc starts at [P]*n (P exceeds every residue) and each
+    shingle h contributes min(acc_i, (a_i·h32 + b_i) mod P) via
+    zip_with over a literal (a, b) parameter array.  h is folded into
+    [0, 2^32) first so a·h32 + b stays under 2^63 (ANSI mode: no
+    bigint overflow)."""
+    from aws_datalake_framework_ingestion_spark.operators.dedup import (
+        _P,
+        _hash_params,
+    )
+
+    params = F.array(
+        *[
+            F.struct(
+                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
+            )
+            for a, b in _hash_params(num_hashes)
+        ]
+    )
+    init = F.array_repeat(F.lit(_P).cast("long"), num_hashes)
+    return F.aggregate(
+        sh_arr,
+        init,
+        lambda acc, h: F.zip_with(
+            acc,
+            params,
+            lambda m, p: F.least(
+                m, (p["a"] * F.pmod(h, F.lit(2**32)) + p["b"]) % F.lit(_P)
+            ),
+        ),
+    )
+
+
 def test_minhash_arrow_matches_expr(spark, docs):
     """The Arrow-vectorized signature kernel must be bit-identical to
     the Catalyst expression fold — same (a·h32+b) mod P integer math,
     different executors."""
     from aws_datalake_framework_ingestion_spark.operators import dedup as D
 
-    a = D.minhash_signatures(docs, impl="arrow").orderBy("doc_id").collect()
-    e = D.minhash_signatures(docs, impl="expr").orderBy("doc_id").collect()
+    a = D.minhash_signatures(docs).orderBy("doc_id").collect()
+    e = (
+        D.doc_shingle_hash_arrays(docs)
+        .select("doc_id", _sig_from_array(F.col("sh_arr"), 64).alias("sig"))
+        .orderBy("doc_id")
+        .collect()
+    )
     assert [r["sig"] for r in a] == [r["sig"] for r in e]
 
 
-def test_minhash_impl_validates(spark, docs):
-    from aws_datalake_framework_ingestion_spark.operators import dedup as D
+def _bucketed_expr(df, id_col, vec_col, num_tables, bits, dim, prefix):
+    """Pure-Catalyst reference for ``similarity._bucketed``: the
+    ``lsh_table_buckets`` zip_with dots, one explode row per table."""
+    from aws_datalake_framework_ingestion_spark.operators.similarity import (
+        lsh_table_buckets,
+    )
 
-    with pytest.raises(ValueError):
-        D.minhash_signatures(docs, impl="nope").collect()
+    checked = df.withColumn(
+        vec_col,
+        F.when(F.size(F.col(vec_col)) == dim, F.col(vec_col)).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"lsh: embedding dim != configured dim={dim} (got "),
+                    F.size(F.col(vec_col)).cast("string"),
+                    F.lit(")"),
+                )
+            )
+        ),
+    )
+    base = checked.withColumn(
+        "_tb", F.explode(lsh_table_buckets(vec_col, num_tables, bits, dim))
+    )
+    return base.select(
+        F.col(id_col).alias(f"{prefix}id"),
+        F.col("_tb.t").alias(f"{prefix}t"),
+        F.col("_tb.b").alias(f"{prefix}b"),
+    )
 
 
 def test_lsh_bucket_impls_agree(spark):
@@ -115,8 +179,8 @@ def test_lsh_bucket_impls_agree(spark):
     from aws_datalake_framework_ingestion_spark.tables import load
 
     emb = load(spark, SF_SMALL, "embeddings")
-    a = _bucketed(emb, "vec_id", "embedding", 8, 4, 64, "_", impl="arrow")
-    e = _bucketed(emb, "vec_id", "embedding", 8, 4, 64, "_", impl="expr")
+    a = _bucketed(emb, "vec_id", "embedding", 8, 4, 64, "_")
+    e = _bucketed_expr(emb, "vec_id", "embedding", 8, 4, 64, "_")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, e.collect()))
 
 
@@ -141,14 +205,61 @@ def test_cosine_pudf_matches_expression_dot(spark):
     assert all(abs(r["c_np"] - r["c_expr"]) < 1e-9 for r in both)
 
 
+def _simhash_expr(df, id_col="doc_id", text_col="text"):
+    """Conditional-sum reference for ``dedup.simhash64``: explode
+    tokens → (doc, token_hash, weight) → 64 conditional-sum aggregates
+    → sign bits recombined with bitwise OR.  Shuffle is O(docs ×
+    distinct tokens), map-combined."""
+    from aws_datalake_framework_ingestion_spark.operators.dedup import (
+        _spread,
+        tokens_col,
+    )
+
+    toks = (
+        _spread(df, id_col)
+        .select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
+        .groupBy(id_col, "tok")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .select(id_col, F.xxhash64("tok").alias("th"), "w")
+    )
+    bit_sums = [
+        F.sum(
+            F.when(F.shiftright(F.col("th"), i).bitwiseAND(F.lit(1)) == 1, F.col("w"))
+            .otherwise(-F.col("w"))
+        ).alias(f"b{i}")
+        for i in range(64)
+    ]
+    agg = toks.groupBy(id_col).agg(*bit_sums)
+    sums = F.array(*[f"b{i}" for i in range(64)])
+    # bit i as a literal power of two (bit 63 = long min value)
+    pow2 = F.array(
+        *[
+            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("bigint")
+            for i in range(64)
+        ]
+    )
+    sig = F.aggregate(
+        F.zip_with(
+            sums,
+            pow2,
+            lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("bigint")),
+        ),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc.bitwiseOR(x),
+    )
+    return agg.select(F.col(id_col), sig.alias("simhash")).withColumn(
+        "simhash_hex", F.lpad(F.hex("simhash"), 16, "0")
+    )
+
+
 def test_simhash_arrow_matches_expr(spark, docs):
     """Zero-shuffle Arrow SimHash must be bit-identical to the
     conditional-sum aggregate path — exact integer sums, same sign
     rule."""
     from aws_datalake_framework_ingestion_spark.operators import dedup as D
 
-    a = D.simhash64(docs, impl="arrow").orderBy("doc_id").collect()
-    e = D.simhash64(docs, impl="expr").orderBy("doc_id").collect()
+    a = D.simhash64(docs).orderBy("doc_id").collect()
+    e = _simhash_expr(docs).orderBy("doc_id").collect()
     assert [(r["doc_id"], r["simhash"], r["simhash_hex"]) for r in a] == [
         (r["doc_id"], r["simhash"], r["simhash_hex"]) for r in e
     ]

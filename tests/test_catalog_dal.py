@@ -355,58 +355,6 @@ def test_single_file_format_roundtrips(spark, tmp_path):
         sinks.write_single_file(src, str(tmp_path / "avro"), fmt="avro")
 
 
-# -- Delta backend (import-gated; skip-marked where delta is absent) -----
-
-
-def test_catalog_delta_gate_raises_when_absent(spark, tmp_path):
-    """fmt='delta' must fail at construction, not at first mutation."""
-    from aws_datalake_framework_ingestion_spark import catalog as C
-
-    if C.HAVE_DELTA:
-        pytest.skip("delta-spark present; gate cannot be exercised")
-    with pytest.raises(RuntimeError, match="delta-spark"):
-        Catalog(spark, str(tmp_path / "d"), fmt="delta")
-
-
-def test_catalog_rejects_unknown_fmt(spark, tmp_path):
-    with pytest.raises(ValueError, match="unsupported catalog format"):
-        Catalog(spark, str(tmp_path / "x"), fmt="orc")
-
-
-def test_catalog_delta_backend(spark, tmp_path):
-    """Same mutation surface + rowcount contract on the Delta backend:
-    UPDATE/DELETE run as transactional DeltaTable ops instead of the
-    parquet staged-swap.  Runs only where delta-spark is installed (a
-    real cluster); the sandbox image lacks it, so this documents the
-    1:1 mapping and keeps it code-reviewed."""
-    from aws_datalake_framework_ingestion_spark import catalog as C
-
-    if not C.HAVE_DELTA:
-        pytest.skip("delta-spark not installed in this environment")
-    cat = Catalog(spark, str(tmp_path / "dcat"), fmt="delta")
-    cat.create_all()
-    rows = [
-        {"asset_id": i, "src_sys_id": 1, "ext_method": "full"} for i in range(5)
-    ]
-    assert cat.insert("data_assets", rows) == 5
-    assert (
-        cat.update(
-            "data_assets",
-            F.col("asset_id") < 2,
-            {"ext_method": F.lit("incremental")},
-        )
-        == 2
-    )
-    assert (
-        cat.read("data_assets")
-        .filter(F.col("ext_method") == "incremental")
-        .count()
-        == 2
-    )
-    assert cat.delete("data_assets", F.col("asset_id") == 4) == 1
-    assert cat.read("data_assets").count() == 4
-
-
 def test_insert_arrow_fast_path_values_and_fallback(catalog, spark, tmp_path):
     """r14 optimization: local-parquet inserts are written driver-side
     by pyarrow (no Spark job).  Pins (a) the fast path actually fires

@@ -323,47 +323,6 @@ def test_streaming_interval_join_matches_batch(spark, event_stream_dir):
     assert got == batch and len(got) > 0
 
 
-def test_tws_running_totals_matches_v1(spark, tmp_path):
-    """Arbitrary-state API v2 (transformWithStateInPandas) twin of the
-    applyInPandasWithState running totals: when the protobuf
-    dependency is present, the final per-user state must equal the v1
-    operator's.  Skip-marked in this container (no protobuf - probed;
-    same environment posture as the Delta backend tests)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not installed; transformWithState needs it")
-
-    from aws_datalake_framework_ingestion_spark.streaming.stateful import (
-        running_user_totals,
-        running_user_totals_tws,
-    )
-
-    in_dir = str(tmp_path / "in")
-    stage_event_files(spark, in_dir, n_files=2)
-
-    def run(op, name):
-        stream = spark.readStream.schema(EVENT_SCHEMA).json(in_dir)
-        q = (
-            op(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.table(name).collect()
-        }
-
-    assert run(running_user_totals, "v1_tot") == run(
-        running_user_totals_tws, "v2_tot"
-    )
-
-
 def test_stream_upsert_parquet_cdc(spark, tmp_path):
     """Streaming CDC upsert: two phases of change files folded into a
     keyed parquet table across two query instances (same checkpoint);

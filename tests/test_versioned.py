@@ -173,3 +173,46 @@ def test_vacuum_reaps_expired_staging_orphans(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "v=00009.tmp.cafe0123"))
     # published snapshots untouched
     assert V._version_dirs(spark, path) == [1, 2]
+
+
+# -- publish file layout (sized_for_publish) ---------------------------
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_publish_coalesces_to_one_file(spark, tmp_path):
+    """A frame estimated under _SMALL_PUBLISH_BYTES publishes through
+    coalesce(1): a narrow plan with no Exchange, one written file."""
+    df = spark.range(0, 10, numPartitions=4).select(F.col("id").alias("v"))
+    plan = _executed_plan(V.sized_for_publish(df))
+    assert "Coalesce 1" in plan and "Exchange" not in plan
+
+    path = str(tmp_path / "small")
+    assert V.write_version(spark, df, path) == 1
+    files = [
+        f for f in os.listdir(os.path.join(path, "v=00001"))
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == 1
+    assert _vals(V.read_version(spark, path)) == list(range(10))
+
+
+@pytest.mark.parametrize(
+    "attr, value",
+    [
+        # an estimate above the threshold
+        ("_SMALL_PUBLISH_BYTES", 0),
+        # no estimate (the stats probe failed) is treated as big
+        ("_estimated_plan_bytes", lambda df: None),
+    ],
+    ids=["above_threshold", "no_estimate"],
+)
+def test_publish_rebalances_unless_known_small(spark, monkeypatch, attr, value):
+    """Anything not known to be small keeps the REBALANCE hint."""
+    monkeypatch.setattr(V, attr, value)
+    df = spark.range(0, 10, numPartitions=4)
+    plan = _executed_plan(V.sized_for_publish(df))
+    assert "REBALANCE_PARTITIONS_BY_NONE" in plan
+    assert "Coalesce" not in plan
