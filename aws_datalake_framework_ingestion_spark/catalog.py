@@ -322,17 +322,23 @@ class Catalog:
     def last_ext_time(self, asset_id: int) -> datetime | None:
         """Highest persisted watermark for an asset; NULL ⇒ caller does
         a full-scan bootstrap (reference get_highest_value_from_catalog,
-        dataIngestionUtils.py:120-129 incl. the null-safe fallback)."""
+        dataIngestionUtils.py:120-129 incl. the null-safe fallback).
+
+        Read as the top-1 non-NULL row, the reference's ``ORDER BY …
+        DESC`` first-row shape: one Spark job with no exchange, where a
+        ``max()`` aggregate takes two."""
         row = (
             self.read("run_ledger")
             .filter(
                 (F.col("asset_id") == asset_id)
                 & F.col("last_ext_time").isNotNull()
             )
-            .agg(F.max("last_ext_time").alias("wm"))
+            .orderBy(F.col("last_ext_time").desc())
+            .select("last_ext_time")
+            .limit(1)
             .first()
         )
-        return row["wm"] if row else None
+        return row["last_ext_time"] if row else None
 
     def record_run(
         self,

@@ -1786,8 +1786,9 @@ def ivf_index_topk(
 
     Ranking contract and emissions are unchanged (query_id, nn_id,
     cosine, rn; cosine desc, nn_id asc; self-pair excluded) — parity
-    with the retained expression twin ``_ivf_index_topk_expr`` is
-    pytest-pinned on ranked triples, including a planted hot cell.
+    with the pre-r14 expression path, kept in tests/test_northstar.py
+    as the reference, is pytest-pinned on ranked triples, including a
+    planted hot cell.
     Cosine VALUES may differ from the interpreted fold in the last
     ULP (einsum pairwise summation): consumers stay recall/set-gated
     (the repo's Arrow-kernel discipline; every registry consumer of
@@ -1875,74 +1876,6 @@ def ivf_index_topk(
     return (
         corpus.mapInPandas(cell_topk, out_schema)
         .where(F.col("query_id") != F.col("nn_id"))
-        .withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-    )
-
-
-def _ivf_index_topk_expr(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """The pre-r14 expression-path twin of ``ivf_index_topk``, kept
-    (like ``dedup.sig_from_arrays``'s precedent) so the kernel's
-    ranking can be parity-pinned against a plan whose every step is
-    independently readable: queries map to cells via a mapInPandas
-    probe, candidates meet the stored assignments through a broadcast
-    cell equi-join, and the interpreted ``_dot`` fold scores inside —
-    identical join shape and tie-breaks to ivf_topk, with the corpus
-    side a parquet scan of the segment union.  Quadratic in the hot
-    cell under drift — test/parity use only."""
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    model = load_ivf_model(spark, index_dir)
-    id_col, vec_col = model["id_col"], model["vec_col"]
-    C = np.asarray(model["centroids"], dtype=np.float64).T
-
-    c = read_ivf_index(spark, index_dir).select(
-        F.col(id_col).alias("nn_id"),
-        F.col(vec_col).alias("_cv"),
-        F.col("_norm").alias("_cn"),
-        "_cell",
-    )
-
-    qin = with_norm(queries.select(id_col, vec_col), vec_col)
-    q_schema = StructType(
-        list(qin.schema.fields)
-        + [StructField("_qcell", IntegerType(), False)]
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            order = np.argsort(-(v @ C), axis=1, kind="stable")[:, :n_probe]
-            rep = pdf.loc[pdf.index.repeat(order.shape[1])].copy()
-            rep["_qcell"] = order.reshape(-1).astype("int32")
-            yield rep
-
-    q = qin.mapInPandas(probe, q_schema).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.col("_norm").alias("_qn"),
-        "_qcell",
-    )
-    sim = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nn_id")
-    )
-    return (
-        c.join(
-            F.broadcast(q),
-            (F.col("_qcell") == F.col("_cell"))
-            & (F.col("query_id") != F.col("nn_id")),
-        )
-        .select("query_id", "nn_id", sim.alias("cosine"))
         .withColumn("rn", F.row_number().over(w).cast("int"))
         .filter(F.col("rn") <= k)
     )

@@ -123,7 +123,10 @@ def run_asset(
     )
     status: dict[str, str] = {}
     try:
-        landed = catalog.spark.read.parquet(raw)
+        # the landing write's schema is known: no schema-inference job
+        # (file sources read every column nullable, so the NOT NULL
+        # checks still see real NULLs)
+        landed = catalog.spark.read.schema(source_df.schema).parquet(raw)
         try:
             quality_check(landed, spec)
         except DQError:

@@ -73,8 +73,10 @@ class JdbcSource:
 
     def max_probe_sql(self, table: str, col: str) -> str:
         """Reference used ORDER BY DESC LIMIT 1 (:136) — LIMIT isn't
-        valid on Oracle/MSSQL anyway; max() is dialect-universal and
-        lets the source use an index."""
+        valid on Oracle/MSSQL anyway; max() is dialect-universal and,
+        when this SQL runs at the source (as the ``query`` option),
+        lets the source use an index.  A ``max()`` over a Spark JDBC
+        DataFrame is not pushed down: Spark fetches the whole column."""
         return f"SELECT max({col}) AS max_val FROM {self.qualified(table)}"  # noqa: S608
 
     def incremental_sql(self, table: str, col: str, lo: str, hi: str) -> str:

@@ -52,6 +52,7 @@ def upsert_batch(
     # local os.path.isdir here would always be False on remote stores,
     # silently replacing the table with the current batch alone
     from ..sources.files import _fs, staged_swap
+    from ..sources.versioned import sized_for_publish
 
     fs, jvm = _fs(spark, table_dir)
     jdir = jvm.org.apache.hadoop.fs.Path(table_dir)
@@ -71,7 +72,9 @@ def upsert_batch(
         merged = last
 
     tmp = f"{table_dir.rstrip('/')}.{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
+    # the publish size rule: base ⋉ keys ∪ last would otherwise write
+    # one more file per batch (base's files plus the batch's)
+    sized_for_publish(merged).write.mode("overwrite").parquet(tmp)
     staged_swap(spark, table_dir, tmp)
 
 

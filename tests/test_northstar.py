@@ -1675,13 +1675,76 @@ def test_cosine_topk_kernel_matches_expression_path(spark, emb):
         S.cosine_topk_kernel(emb, F.col("vec_id") < 0, k=5)
 
 
+def _ivf_index_topk_expr(spark, index_dir, queries, k=5, n_probe=4):
+    """The pre-r14 expression path of ``S.ivf_index_topk``, the
+    reference its kernel's ranking is pinned against: every step is
+    independently readable.  Queries map to cells via a mapInPandas
+    probe, candidates meet the stored assignments through a broadcast
+    cell equi-join, and the interpreted ``_dot`` fold scores inside —
+    identical join shape and tie-breaks to ivf_topk, with the corpus
+    side a parquet scan of the segment union.  Quadratic in the hot
+    cell under drift."""
+    import numpy as np
+    from pyspark.sql import Window as W
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    model = S.load_ivf_model(spark, index_dir)
+    id_col, vec_col = model["id_col"], model["vec_col"]
+    C = np.asarray(model["centroids"], dtype=np.float64).T
+
+    c = S.read_ivf_index(spark, index_dir).select(
+        F.col(id_col).alias("nn_id"),
+        F.col(vec_col).alias("_cv"),
+        F.col("_norm").alias("_cn"),
+        "_cell",
+    )
+
+    qin = S.with_norm(queries.select(id_col, vec_col), vec_col)
+    q_schema = StructType(
+        list(qin.schema.fields)
+        + [StructField("_qcell", IntegerType(), False)]
+    )
+
+    def probe(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            order = np.argsort(-(v @ C), axis=1, kind="stable")[:, :n_probe]
+            rep = pdf.loc[pdf.index.repeat(order.shape[1])].copy()
+            rep["_qcell"] = order.reshape(-1).astype("int32")
+            yield rep
+
+    q = qin.mapInPandas(probe, q_schema).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        F.col("_norm").alias("_qn"),
+        "_qcell",
+    )
+    sim = S._dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("nn_id")
+    )
+    return (
+        c.join(
+            F.broadcast(q),
+            (F.col("_qcell") == F.col("_cell"))
+            & (F.col("query_id") != F.col("nn_id")),
+        )
+        .select("query_id", "nn_id", sim.alias("cosine"))
+        .withColumn("rn", F.row_number().over(w).cast("int"))
+        .filter(F.col("rn") <= k)
+    )
+
+
 def test_ivf_index_topk_kernel_matches_expression_path(
     spark, emb, tmp_path
 ):
     """The r14 Arrow-scored ivf_index_topk must return the SAME
-    ranked (query_id, nn_id, rn) triples as the retained expression
-    twin — on a healthy index AND under the drift shape the kernel
-    exists for (a boundary-planted cluster concentrating every query
+    ranked (query_id, nn_id, rn) triples as the expression path
+    (``_ivf_index_topk_expr`` above) — on a healthy index AND under
+    the drift shape the kernel exists for (a boundary-planted cluster
+    concentrating every query
     into the collapsed cells), where candidate counts per query are
     largest and preselection windows are actually exercised.  The
     healthy-index half also rides the lifecycle test's pin vs a
@@ -1705,7 +1768,7 @@ def test_ivf_index_topk_kernel_matches_expression_path(
             S.ivf_index_topk(spark, idx, queries, k=4, n_probe=np_)
         )
         want = triples(
-            S._ivf_index_topk_expr(
+            _ivf_index_topk_expr(
                 spark, idx, queries, k=4, n_probe=np_
             )
         )
@@ -1736,7 +1799,7 @@ def test_ivf_index_topk_kernel_matches_expression_path(
     q = shifted.select("vec_id", "embedding")
     got_d = triples(S.ivf_index_topk(spark, idx, q, k=5, n_probe=1))
     want_d = triples(
-        S._ivf_index_topk_expr(spark, idx, q, k=5, n_probe=1)
+        _ivf_index_topk_expr(spark, idx, q, k=5, n_probe=1)
     )
     assert got_d == want_d and len(got_d) == 200 * 5
 

@@ -42,22 +42,34 @@ def test_probe_max_matches_orderby_limit(spark):
     assert probe_max(ev, "ts") == top1  # max() ≡ reference's top-1 sort
 
 
-def test_plan_full_vs_incremental(spark):
+def test_plan_full_vs_incremental(spark, catalog, tmp_path):
     ev = load(spark, SF, "events")
     df, plan = plan_extraction(ev, "full", None, None)
     assert plan.mode == "full" and df.count() == ev.count()
 
-    # NULL watermark → bootstrap full scan, watermark still recorded
-    df, plan = plan_extraction(ev, "incremental", "ts", None)
-    assert plan.mode == "full" and plan.hi is not None
-    assert df.count() == ev.count()
+    def extract(name):
+        dest = str(tmp_path / name)
+        plan = run_extraction(
+            catalog, ev, asset_id=12, ext_method="incremental",
+            ext_col="ts", dest_path=dest,
+        )
+        return spark.read.parquet(dest), plan
+
+    # NULL watermark → bootstrap full scan; hi is the max of what landed
+    landed, plan = extract("boot")
+    assert plan.mode == "full" and plan.hi == probe_max(ev, "ts")
+    assert landed.count() == plan.n_rows == ev.count()
 
     # (lo, hi] half-open interval
     lo = probe_max(ev, "ts") - timedelta(days=1)
+    catalog.record_run("1_12_lo", 1, 12, str(tmp_path / "boot"), lo)
     df, plan = plan_extraction(ev, "incremental", "ts", lo)
     assert plan.mode == "incremental" and plan.lo == lo
+    landed, plan = extract("window")
+    assert plan.mode == "incremental" and plan.lo == lo
+    assert plan.hi == probe_max(ev, "ts")
     exp = ev.filter((F.col("ts") > F.lit(lo)) & (F.col("ts") <= F.lit(plan.hi)))
-    assert df.count() == exp.count() > 0
+    assert df.count() == landed.count() == plan.n_rows == exp.count() > 0
 
 
 def test_incremental_rerun_extracts_nothing_new(spark, catalog, tmp_path):
@@ -84,6 +96,7 @@ def test_incremental_rerun_extracts_nothing_new(spark, catalog, tmp_path):
     land2, plan2 = extract_and_commit(ev, "land2")
     assert plan2.mode == "incremental"
     assert spark.read.parquet(land2).count() == 0  # nothing new
+    assert plan2.hi == plan1.hi  # an empty window keeps the watermark
 
     # simulate late-arriving source rows after the watermark
     extra = ev.withColumn("ts", F.col("ts") + F.expr("INTERVAL 100 DAYS"))
@@ -242,11 +255,77 @@ def test_run_asset_uncommitted_window_is_reextracted(
     assert row["exec_id"] == e2 and row["last_ext_time"] == probe_max(ev, "ts")
 
 
+def test_run_asset_bootstrap_race_lands_each_row_once(
+    spark, catalog, tmp_path, monkeypatch
+):
+    """A row committed to the source after the plan is made but before
+    the bootstrap scan runs is landed by that scan, so the watermark
+    must cover it: over two ticks against a live JDBC source (embedded
+    Derby) every event id is published exactly once."""
+    import uuid
+
+    from aws_datalake_framework_ingestion_spark import planner
+    from aws_datalake_framework_ingestion_spark.sources.jdbc import (
+        JdbcMutator,
+        JdbcSource,
+    )
+
+    src = JdbcSource(
+        db_type="derby", hostname="", port=0,
+        db_name=f"race{uuid.uuid4().hex[:8]}", username="app",
+    )
+    mut = JdbcMutator(spark, src)
+    mut.execute_update(
+        "CREATE TABLE EVENTS (EVENT_ID BIGINT NOT NULL, TS TIMESTAMP NOT NULL)"
+    )
+    jts = spark.sparkContext._jvm.java.sql.Timestamp.valueOf
+
+    def add(event_id):
+        ts = datetime(2030, 1, 1) + timedelta(seconds=event_id)
+        mut.execute_update(
+            "INSERT INTO EVENTS VALUES (?, ?)",
+            (event_id, jts(ts.strftime("%Y-%m-%d %H:%M:%S"))),
+        )
+
+    for i in range(5):
+        add(i)
+    real_plan = planner.plan_extraction
+    raced = []
+
+    def plan_then_commit_a_row(*args, **kwargs):
+        out = real_plan(*args, **kwargs)
+        if not raced:  # the bootstrap tick: a writer commits mid-run
+            raced.append(5)
+            add(5)
+        return out
+
+    monkeypatch.setattr(planner, "plan_extraction", plan_then_commit_a_row)
+    source = src.read(spark, src.full_scan_sql("EVENTS"))
+    spec = AssetSpec(
+        asset_id=27, src_sys_id=3, ext_method="incremental", ext_col="TS",
+        dq_not_null=("EVENT_ID", "TS"), dq_unique=("EVENT_ID",),
+    )
+    zone = tmp_path / "zone"
+    run_asset(catalog, spec, source, str(zone), run_ts=datetime(2030, 1, 1))
+    add(6)
+    run_asset(catalog, spec, source, str(zone), run_ts=datetime(2030, 1, 2))
+
+    published = [
+        r["EVENT_ID"]
+        for r in spark.read.parquet(str(zone / "27" / "publish" / "*"))
+        .select("EVENT_ID")
+        .collect()
+    ]
+    assert raced == [5]
+    assert sorted(published) == list(range(7))  # each id exactly once
+    assert catalog.last_ext_time(27) == datetime(2030, 1, 1, 0, 0, 6)
+
+
 #: Spark jobs of one warm incremental ``run_asset`` tick over a small
 #: in-memory source (measured; equality, so an added job — e.g. a
 #: Spark-side ledger rewrite — fails here, and a removed one must
 #: re-pin the count)
-RUN_ASSET_TICK_JOBS = 10
+RUN_ASSET_TICK_JOBS = 6
 
 
 def test_run_asset_tick_job_count(spark, catalog, tmp_path):

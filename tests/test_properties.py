@@ -9,12 +9,15 @@ still gives minimal counterexamples on failure.
 from __future__ import annotations
 
 import datetime as dt
+import os
+import tempfile
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from aws_datalake_framework_ingestion_spark.operators import temporal as TP
 from aws_datalake_framework_ingestion_spark import planner as P
+from aws_datalake_framework_ingestion_spark.catalog import Catalog
 
 EPOCH = dt.datetime(2024, 1, 1)
 
@@ -82,9 +85,10 @@ def test_range_join_matches_bruteforce(spark, rows, window):
     )
 )
 def test_incremental_plan_replay_never_duplicates(spark, batches):
-    """Feeding cumulative batches through plan_extraction with the
-    persisted watermark must extract every row exactly once across
-    runs (monotone watermark, half-open interval).
+    """Feeding cumulative batches through run_extraction, each run
+    committed with record_run as run_asset commits it, must extract
+    every row exactly once across runs (monotone watermark, half-open
+    interval).
 
     Batches advance in time (batch k's rows are offset by k·10^4 s):
     watermark extraction is exactly-once only for append-only sources
@@ -95,17 +99,28 @@ def test_incremental_plan_replay_never_duplicates(spark, batches):
     seen: set[int] = set()
     extracted: list[dt.datetime] = []
     last_wm = None
-    for b, batch in enumerate(batches):
-        seen.update(b * 10_000 + s for s in batch)
-        rows = [
-            (i, EPOCH + dt.timedelta(seconds=s)) for i, s in enumerate(sorted(seen))
-        ]
-        df = spark.createDataFrame(rows, "rid long, ts timestamp_ntz")
-        out, plan = P.plan_extraction(df, "incremental", "ts", last_wm)
-        got = [r["ts"] for r in out.collect()]
-        extracted.extend(got)
-        if plan.hi is not None:
+    # hypothesis rejects function-scoped fixtures such as tmp_path
+    with tempfile.TemporaryDirectory() as root:
+        catalog = Catalog(spark, os.path.join(root, "cat"))
+        catalog.create_all()
+        for b, batch in enumerate(batches):
+            seen.update(b * 10_000 + s for s in batch)
+            rows = [
+                (i, EPOCH + dt.timedelta(seconds=s))
+                for i, s in enumerate(sorted(seen))
+            ]
+            df = spark.createDataFrame(rows, "rid long, ts timestamp_ntz")
+            dest = os.path.join(root, f"land{b}")
+            plan = P.run_extraction(
+                catalog, df, asset_id=1, ext_method="incremental",
+                ext_col="ts", dest_path=dest,
+            )
+            got = [r["ts"] for r in spark.read.parquet(dest).collect()]
+            assert len(got) == plan.n_rows
+            extracted.extend(got)
+            assert plan.lo == last_wm and plan.hi is not None
             assert last_wm is None or plan.hi >= last_wm  # monotone
+            catalog.record_run(f"run{b}", 1, 1, dest, plan.hi, plan.n_rows)
             last_wm = plan.hi
     # exactly-once across all runs
     assert len(extracted) == len(set(extracted))

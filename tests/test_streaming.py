@@ -430,13 +430,18 @@ def test_cdc_upsert_crash_mid_batch_resume(spark, tmp_path):
             for r in spark.read.parquet(table).collect()
         }
 
+    def n_files():
+        return sum(1 for f in os.listdir(table) if f.endswith(".parquet"))
+
     # phase 1: one file per micro-batch; crash after batch 1's merge
     # has been PUBLISHED but before its checkpoint commit is written
     applied = []
+    files = []
 
     def crashing_sink(bdf, epoch):
         upsert_batch(spark, bdf, table, ["k"], ["seq"])
         applied.append(epoch)
+        files.append(n_files())
         if epoch == 1:
             raise RuntimeError("injected crash: side effect landed, commit not")
 
@@ -452,6 +457,9 @@ def test_cdc_upsert_crash_mid_batch_resume(spark, tmp_path):
     with pytest.raises(StreamingQueryException):
         q.awaitTermination()
     assert applied == [0, 1]  # the crash hit exactly where intended
+    # the table does not gain a file per batch (base ⋉ keys ∪ batch is
+    # written with the publish size rule)
+    assert files == [1, 1]
     # the uncommitted batch's side effects ARE on disk (that's the bug
     # class this test pins: state ahead of the checkpoint)
     assert snap() == {1: ("a2", 3), 2: ("b", 2), 3: ("c", 4)}
@@ -465,6 +473,7 @@ def test_cdc_upsert_crash_mid_batch_resume(spark, tmp_path):
     )
     final = snap()
     assert final == {1: ("a2", 3), 2: ("b2", 5), 3: ("c2", 7), 4: ("d", 6)}
+    assert n_files() == 1
 
     # convergence to the one-shot batch fold (the CDC oracle shape)
     all_rows = [r for rs in rows_by_file for r in rs]
