@@ -48,6 +48,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import Catalog
 from .sources.versioned import sized_for_publish
@@ -84,18 +85,20 @@ class CurationSpec:
         ).hexdigest()
 
 
+def _is_probe(spec: CurationSpec):
+    """Held-out eval probe membership of a doc (md5(doc_id) below the
+    probe prefix)."""
+    return (
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+        < spec.probe_prefix
+    )
+
+
 def _probe_fps(docs: DataFrame, spec: CurationSpec) -> DataFrame:
     """Fingerprints of the held-out probe docs, derived from the
     ORIGINAL corpus (eval membership must not depend on what earlier
     stages dropped)."""
-    return (
-        docs.where(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-            < spec.probe_prefix
-        )
-        .select(_fp().alias("fp"))
-        .distinct()
-    )
+    return docs.where(_is_probe(spec)).select(_fp().alias("fp")).distinct()
 
 
 def _fp():
@@ -359,6 +362,18 @@ def run_curation(
 # Incremental (delta-batch) curation — the 24/7 "daily delta" posture
 # --------------------------------------------------------------------------
 
+#: data schemas of the three stores run_curation_incremental writes
+#: (read back with them, so no read infers a schema); the corpus
+#: own-segment check needs only the batch tag
+_BATCH_FIELD = T.StructField("batch", T.IntegerType())
+_SIGS_SCHEMA = T.StructType(
+    [T.StructField("sig", T.StringType()), _BATCH_FIELD]
+)
+_PROBES_SCHEMA = T.StructType(
+    [T.StructField("fp", T.StringType()), _BATCH_FIELD]
+)
+_BATCH_SCHEMA = T.StructType([_BATCH_FIELD])
+
 INC_STAGES: tuple[str, ...] = (
     "gopher_rules",
     "lang_filter",
@@ -491,8 +506,8 @@ def run_curation_incremental(
             _store_base(spark, path) is not None
         )
 
-    def _store(path: str) -> DataFrame:
-        return _read_store(spark, path)
+    def _store(path: str, schema: T.StructType) -> DataFrame:
+        return _read_store(spark, path, schema=schema)
 
     def _digest(df: DataFrame, key: str):
         """(count, decimal-exact 56-bit content sum) over one column —
@@ -507,17 +522,27 @@ def run_curation_incremental(
             ).first()
         )
 
-    def _register(path: str, df: DataFrame, key: str) -> None:
+    def _register(
+        path: str,
+        df: DataFrame,
+        key: str,
+        schema: T.StructType,
+        nonempty: bool,
+    ) -> None:
         """Idempotently append this batch's rows to a versioned store.
         When a segment tagged with this batch already exists (the
         replay-after-crash seam) the recomputed rows must MATCH it —
         a replay with changed batch input would otherwise silently
-        leave the changed rows unregistered."""
+        leave the changed rows unregistered.  ``nonempty`` is whether
+        ``df`` has rows, known from the batch's observed counts."""
         if _has(path) and (
-            _store(path).where(F.col("batch") == batch_id).limit(1).count()
+            _store(path, schema)
+            .where(F.col("batch") == batch_id)
+            .limit(1)
+            .count()
         ):
             committed_d = _digest(
-                _store(path).where(F.col("batch") == batch_id), key
+                _store(path, schema).where(F.col("batch") == batch_id), key
             )
             recomputed_d = _digest(df, key)
             if committed_d != recomputed_d:
@@ -529,7 +554,7 @@ def run_curation_incremental(
                     "segment"
                 )
             return
-        if df.limit(1).count():
+        if nonempty:
             write_version(spark, df, path)
 
     stage_at = 1  # failure tracker: which INC_STAGES entry is running
@@ -543,17 +568,32 @@ def run_curation_incremental(
         # the registry/segment side effects run AFTERWARD from the
         # already-consumed observations (same commit order as
         # before: sigs → probes → segment → ledger).  Stage
-        # expressions are byte-identical to the previous
-        # per-stage build — only the action count changed.
+        # results are identical to the previous per-stage build —
+        # only the action count changed.
+        #
+        # Nor does the batch launch a job whose answer it already
+        # has.  The stores are read with their declared schemas, so
+        # no read runs a schema-inference job.  Neither anti-join
+        # build side (``seen``, ``probes``) is made distinct: a
+        # left_anti keeps a row exactly when its key is ABSENT from
+        # the build side, which duplicate keys there cannot change,
+        # so a distinct would only add an aggregate stage.  ``o[0]``
+        # also counts the batch's probe docs (``n_probe``); with the
+        # lang count ``n2`` that says whether each registry write has
+        # rows, so emptiness no longer costs a job per registry.
         from pyspark.sql import Observation
         from pyspark.sql import Window as _W
 
         o = [Observation() for _ in range(6)]
 
-        def _cnt(df: DataFrame, i: int) -> DataFrame:
-            return df.observe(o[i], F.count(F.lit(1)).alias("n"))
+        def _cnt(df: DataFrame, i: int, *extra) -> DataFrame:
+            return df.observe(o[i], F.count(F.lit(1)).alias("n"), *extra)
 
-        base = _cnt(batch_docs.select("doc_id", "text", "n_chars"), 0)
+        base = _cnt(
+            batch_docs.select("doc_id", "text", "n_chars"),
+            0,
+            F.count_if(_is_probe(spec)).alias("n_probe"),
+        )
         g = _cnt(_stage_gopher(spec, base), 1)
         stage_at = 2
         lang = _cnt(_stage_lang(spec, g), 2)
@@ -570,10 +610,9 @@ def run_curation_incremental(
             .drop("_rn")
         )
         seen = (
-            _store(sigs_dir)
+            _store(sigs_dir, _SIGS_SCHEMA)
             .where(F.col("batch") < batch_id)
             .select(F.col("sig").alias("_s"))
-            .distinct()
             if _has(sigs_dir)
             else None
         )
@@ -595,16 +634,17 @@ def run_curation_incremental(
         # re-derives from ``batch_docs`` (NOT the observed ``base``
         # node): the probe relation is a broadcast-side branch of the
         # same action, and routing it through the observation node
-        # would double-count n0 when both branches evaluate.
-        own_probes = _probe_fps(
-            batch_docs.select("doc_id", "text", "n_chars"), spec
+        # would double-count n0 when both branches evaluate.  For the
+        # same reason ``n_probe`` is counted on ``base`` only, which
+        # the main branch evaluates once.
+        own_probes = batch_docs.where(_is_probe(spec)).select(
+            _fp().alias("fp")
         )
         probes = (
-            _store(probes_dir)
+            _store(probes_dir, _PROBES_SCHEMA)
             .where(F.col("batch") <= batch_id)
             .select("fp")
             .unionByName(own_probes)
-            .distinct()
             if _has(probes_dir)
             else own_probes
         )
@@ -625,12 +665,18 @@ def run_curation_incremental(
         )
         survivors.count()  # the ONE evaluation; fires o[0..5]
         n0, n1, n2, n3, n4, n5 = (int(ob.get["n"]) for ob in o)
+        n_probe = int(o[0].get["n_probe"])
         stage_at = 3
 
         # ---- registry side effects --------------------------------
         # re-derived from the raw batch (observation-free subtrees —
-        # the observations are already consumed, and register probes
-        # use limit(1) actions that must not flow through them).
+        # the observations are already consumed, and the own-segment
+        # checks use limit(1) actions that must not flow through
+        # them).  Whether a registry write has rows comes from the
+        # observed counts: the registered sigs are the distinct sigs
+        # of the lang output, non-empty exactly when n2 > 0; the
+        # registered probe fps are non-empty exactly when the batch
+        # holds a probe doc (n_probe > 0).
         # r14 (guide §2.6, overlap independent jobs): the three store
         # publishes touch DISJOINT stores and none reads another's
         # output, so they run as three concurrent driver threads —
@@ -653,6 +699,8 @@ def run_curation_incremental(
                 .distinct()
                 .withColumn("batch", F.lit(batch_id)),
                 key="sig",
+                schema=_SIGS_SCHEMA,
+                nonempty=n2 > 0,
             )
 
         def _reg_probes() -> None:
@@ -660,11 +708,13 @@ def run_curation_incremental(
                 probes_dir,
                 _probe_fps(raw_u, spec).withColumn("batch", F.lit(batch_id)),
                 key="fp",
+                schema=_PROBES_SCHEMA,
+                nonempty=n_probe > 0,
             )
 
         def _pub_corpus() -> None:
             own_seg = _has(corpus_dir) and (
-                _store(corpus_dir)
+                _store(corpus_dir, _BATCH_SCHEMA)
                 .where(F.col("batch") == batch_id)
                 .limit(1)
                 .count()
@@ -672,7 +722,7 @@ def run_curation_incremental(
             )
             if own_seg:
                 n_pub = (
-                    _store(corpus_dir)
+                    _store(corpus_dir, _BATCH_SCHEMA)
                     .where(F.col("batch") == batch_id)
                     .count()
                 )

@@ -49,20 +49,26 @@ from pyspark.sql import types as T
 
 from ..sources.versioned import _version_dirs, write_version
 
+_FP_SCHEMA = T.StructType([T.StructField("fp", T.StringType())])
+
 
 def corpus_fps(spark: SparkSession, corpus_dir: str) -> DataFrame | None:
     """Fingerprint column of every committed segment (None when the
-    corpus has no segments yet).  Column pruning means this scan reads
-    ONLY the fp column at any corpus size."""
+    corpus has no segments yet).  The declared one-column schema means
+    this scan reads ONLY the fp column at any corpus size, and infers
+    no schema."""
     if not _version_dirs(spark, corpus_dir) and not _base_info(
         spark, corpus_dir
     ):
         return None
-    return read_corpus(spark, corpus_dir).select("fp")
+    return read_corpus(spark, corpus_dir, schema=_FP_SCHEMA).select("fp")
 
 
 def read_corpus(
-    spark: SparkSession, corpus_dir: str, as_of: int | None = None
+    spark: SparkSession,
+    corpus_dir: str,
+    as_of: int | None = None,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """The corpus as the union of committed segments, with the segment
     number as partition column ``v``.  ``as_of`` time-travels to the
@@ -73,18 +79,43 @@ def read_corpus(
     segment-compaction section below): rows = the compacted directory
     (which carries each row's ORIGINAL segment number as a data
     column) plus any live segment published after the compaction's
-    high-water mark."""
+    high-water mark.
+
+    ``schema`` is the data schema of the segments (without ``v``),
+    for a caller that wrote the store and so knows it.  Without it
+    each Parquet read infers the schema from the footers, one Spark
+    job each; with it the read launches none, ``v`` is still
+    discovered from the segment paths (and read as the ``int`` data
+    column it is in the compacted directory), and a subset of the
+    stored columns reads only those columns.  Either way, above 32
+    live segments (``spark.sql.sources.parallelPartitionDiscovery.
+    threshold``) each read pays one parallel-listing job; compaction
+    is the remedy."""
     base = corpus_dir.rstrip("/")
     info = _base_info(spark, base)
+
+    def _reader(sch: T.StructType | None):
+        return spark.read if sch is None else spark.read.schema(sch)
+
+    def _segments() -> DataFrame:
+        return _reader(schema).option("basePath", base).parquet(f"{base}/v=*")
+
     if info is None:
-        df = spark.read.option("basePath", base).parquet(f"{base}/v=*")
+        df = _segments()
     else:
         c_num, upto = info
-        df = spark.read.parquet(f"{base}/c={c_num:05d}")
+        # a new StructType: StructType.add would mutate the caller's
+        c_schema = (
+            None
+            if schema is None
+            else T.StructType(
+                [*schema.fields, T.StructField("v", T.IntegerType())]
+            )
+        )
+        df = _reader(c_schema).parquet(f"{base}/c={c_num:05d}")
         if any(v > upto for v in _version_dirs(spark, base)):
             live = (
-                spark.read.option("basePath", base)
-                .parquet(f"{base}/v=*")
+                _segments()
                 .where(F.col("v") > upto)
                 .withColumn("v", F.col("v").cast("int"))
             )

@@ -444,6 +444,7 @@ def test_incremental_stores_survive_compaction(spark, tmp_path):
         C.run_curation_incremental(
             cat, spec, docs.where(F.col("doc_id") % 3 == b), store, b
         )
+    _assert_schema_reads_match(spark, store)  # live segments only
     pre = sorted(
         map(tuple, read_corpus(spark, f"{store}/corpus")
             .select("doc_id", "sig", "batch").collect())
@@ -467,3 +468,146 @@ def test_incremental_stores_survive_compaction(spark, tmp_path):
     # and batch 2's segment is LIVE (published past the compaction
     # high-water mark), proving append-after-compact numbering
     assert corpus.where(F.col("batch") == 2).count() == f2[-1][3]
+    # compacted directory + a live segment past its high-water mark
+    _assert_schema_reads_match(spark, store)
+
+
+def _assert_schema_reads_match(spark, store):
+    """read_corpus with a declared schema returns the rows and dtypes
+    (``v`` included) of the inferred read, and leaves the caller's
+    StructType as it was."""
+    from pyspark.sql import types as T
+
+    from aws_datalake_framework_ingestion_spark.streaming.shard_append import (
+        read_corpus,
+    )
+
+    corpus_inferred = read_corpus(spark, f"{store}/corpus")
+    corpus_schema = T.StructType(
+        [f for f in corpus_inferred.schema.fields if f.name != "v"]
+    )
+    for sub, schema in (
+        ("corpus", corpus_schema),
+        ("sigs", C._SIGS_SCHEMA),
+        ("probes", C._PROBES_SCHEMA),
+    ):
+        before = schema.json()
+        inferred = read_corpus(spark, f"{store}/{sub}")
+        declared = read_corpus(spark, f"{store}/{sub}", schema=schema)
+        assert schema.json() == before, sub
+        assert declared.dtypes == inferred.dtypes, sub
+        assert sorted(map(tuple, declared.collect())) == sorted(
+            map(tuple, inferred.collect())
+        ), sub
+
+
+def _seg_dirs(path):
+    if not os.path.isdir(path):
+        return []
+    return sorted(d for d in os.listdir(path) if d.startswith("v="))
+
+
+def _pick_ids(pred, n):
+    """The ``n`` smallest doc ids whose md5 hex prefix satisfies
+    ``pred``."""
+    out, i = [], 0
+    while len(out) < n:
+        if pred(hashlib.md5(str(i).encode()).hexdigest()[:2]):
+            out.append(i)
+        i += 1
+    return out
+
+
+#: passes gopher (25 words, mean length 5.48, all alpha, two stop
+#: markers) and the en lang filter
+_KEPT_TEXT = (
+    "the brave hunter walks through dense forest trails and finds "
+    "hidden golden treasure beneath ancient stones while birds watch "
+    "quietly above the misty valley floor"
+)
+
+
+def test_incremental_batch_without_probes_registers_no_probe_segment(
+    spark, tmp_path
+):
+    """Docs that pass gopher and lang but hold no probe doc: the sig
+    registry gains a segment, the probe registry none."""
+    ids = _pick_ids(lambda h: h >= "05", 2)  # no probe doc
+    rows = [(ids[0], _KEPT_TEXT, len(_KEPT_TEXT)),
+            (ids[1], _KEPT_TEXT + " again", len(_KEPT_TEXT) + 6)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, n_chars int")
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    store = str(tmp_path / "store")
+    fn = C.run_curation_incremental(cat, _inc_spec("i9"), docs, store, 0)[
+        "funnel"
+    ]
+    assert [r[3] for r in fn[:2]] == [2, 2]
+    assert _seg_dirs(f"{store}/sigs") == ["v=00001"]
+    assert _seg_dirs(f"{store}/probes") == []
+
+
+def test_incremental_batch_gopher_drops_registers_nothing(spark, tmp_path):
+    """A batch gopher drops entirely (no probe doc either): no sigs, no
+    probes and no corpus segment, and the all-zero funnel is committed
+    to the ledger as succeeded."""
+    ids = _pick_ids(lambda h: h >= "05", 3)
+    docs = spark.createDataFrame(
+        [(i, "too short", 9) for i in ids],
+        "doc_id long, text string, n_chars int",
+    )
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    store = str(tmp_path / "store")
+    res = C.run_curation_incremental(cat, _inc_spec("i10"), docs, store, 0)
+    expected = [(1, "gopher_rules", 3, 0)] + [
+        (i, n, 0, 0) for i, n in enumerate(C.INC_STAGES[1:], start=2)
+    ]
+    assert not res["replayed"] and res["funnel"] == expected
+    led = sorted(
+        (r["stage"], r["name"], r["status"], r["n_in"], r["n_out"],
+         r["out_path"])
+        for r in cat.read(C.LEDGER_TABLE)
+        .where(F.col("run_id") == "i10@b000")
+        .collect()
+    )
+    assert led == [
+        (st, n, "succeeded", i, o,
+         f"{store}/corpus" if n == "publish" else None)
+        for st, n, i, o in expected
+    ]
+    for sub in ("sigs", "probes", "corpus"):
+        assert _seg_dirs(f"{store}/{sub}") == [], sub
+
+
+#: Spark jobs of one warm ``run_curation_incremental`` batch (the third
+#: of three) over the sf0.001 documents (measured; equality, so an added
+#: job fails here, and a removed one must re-pin the count)
+CURATE_BATCH_JOBS = 18
+
+
+def test_incremental_warm_batch_job_count(spark, tmp_path):
+    docs = _docs(spark)
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    spec = _inc_spec("i11")
+    store = str(tmp_path / "store")
+    for b in range(2):
+        C.run_curation_incremental(
+            cat, spec, docs.where(F.col("doc_id") % 3 == b), store, b
+        )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"curate_batch_{os.getpid()}"
+    sc.setJobGroup(group, "one warm incremental curation batch")
+    try:
+        res = C.run_curation_incremental(
+            cat, spec, docs.where(F.col("doc_id") % 3 == 2), store, 2
+        )
+    finally:
+        sc.setJobGroup("", "")
+    # the store publishes run on pool threads, which do not inherit
+    # the job group: their jobs are the new ungrouped ones
+    n_jobs = len(tracker.getJobIdsForGroup(group)) + len(
+        set(tracker.getJobIdsForGroup(None)) - ungrouped
+    )
+    assert not res["replayed"]
+    assert n_jobs == CURATE_BATCH_JOBS, n_jobs
