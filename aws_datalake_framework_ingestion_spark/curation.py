@@ -440,7 +440,14 @@ def run_curation_incremental(
     own-segment check (segment present ⇒ skip the write, verify the
     recomputed count matches), and the same drift check guards the
     registry stores (a replay with CHANGED batch input raises instead
-    of silently leaving the changed rows unregistered).  A stage
+    of silently leaving the changed rows unregistered).  The ledger
+    rows of stages 3, 4 and 6 name the segment each published
+    (``{store_root}/sigs/v=00012``; None when it published none), so
+    the check scans a store only when it holds a segment that no
+    committed row of the pipeline names, or a compaction base: only a
+    crashed attempt of this batch leaves a segment of it, and such a
+    segment is never named.  A fresh batch on a clean history thus
+    launches no job and reads no store before its writes.  A stage
     failure records a ``failed`` ledger row and re-raises
     (run_curation's fail-fast contract).  Re-running a fully-committed
     batch is a no-op returning the committed funnel.
@@ -501,17 +508,34 @@ def run_curation_incremental(
     from .streaming.shard_append import _base_info as _store_base
     from .streaming.shard_append import read_corpus as _read_store
 
-    def _has(path: str) -> bool:
-        return bool(_version_dirs(spark, path)) or (
-            _store_base(spark, path) is not None
+    def _seg(path: str, v: int) -> str:
+        """The name a ledger row gives segment ``v`` of store ``path``."""
+        return posixpath.join(path, f"v={v:05d}")
+
+    # A store needs the own-segment scan only when it holds a segment
+    # that no committed row names, or a compaction base, whose folded
+    # rows hide their segment directories (see Crash-safety above).
+    # Legacy rows (out_path the corpus directory, or None) name no
+    # segment, so their stores keep the scan.  The listings are
+    # driver-side and launch no job.
+    named = {r["out_path"] for r in prior}
+    has: dict[str, bool] = {}
+    may_hold_own: dict[str, bool] = {}
+    for path in (sigs_dir, probes_dir, corpus_dir):
+        vs = _version_dirs(spark, path)
+        based = _store_base(spark, path) is not None
+        has[path] = bool(vs) or based
+        may_hold_own[path] = based or any(
+            _seg(path, v) not in named for v in vs
         )
 
     def _store(path: str, schema: T.StructType) -> DataFrame:
         return _read_store(spark, path, schema=schema)
 
-    def _digest(df: DataFrame, key: str):
+    def _digest(df: DataFrame, key: str, *extra):
         """(count, decimal-exact 56-bit content sum) over one column —
-        the order-free drift detector (1-row aggregate)."""
+        the order-free drift detector (1-row aggregate) — followed by
+        the ``extra`` aggregates."""
         return tuple(
             df.select(
                 F.count(F.lit(1)).alias("n"),
@@ -519,6 +543,7 @@ def run_curation_incremental(
                     F.conv(F.substring(F.md5(F.col(key)), 1, 14), 16, 10)
                     .cast("decimal(38,0)")
                 ).alias("h"),
+                *extra,
             ).first()
         )
 
@@ -528,34 +553,39 @@ def run_curation_incremental(
         key: str,
         schema: T.StructType,
         nonempty: bool,
-    ) -> None:
-        """Idempotently append this batch's rows to a versioned store.
-        When a segment tagged with this batch already exists (the
-        replay-after-crash seam) the recomputed rows must MATCH it —
-        a replay with changed batch input would otherwise silently
-        leave the changed rows unregistered.  ``nonempty`` is whether
-        ``df`` has rows, known from the batch's observed counts."""
-        if _has(path) and (
+    ) -> str | None:
+        """Idempotently append this batch's rows to a versioned store;
+        returns the segment that holds them (None when there are
+        none).  When a segment tagged with this batch already exists
+        (the replay-after-crash seam) the recomputed rows must MATCH
+        it — a replay with changed batch input would otherwise
+        silently leave the changed rows unregistered.  ``nonempty`` is
+        whether ``df`` has rows, known from the batch's observed
+        counts."""
+        if may_hold_own[path] and (
             _store(path, schema)
             .where(F.col("batch") == batch_id)
             .limit(1)
             .count()
         ):
-            committed_d = _digest(
-                _store(path, schema).where(F.col("batch") == batch_id), key
+            n, h, v = _digest(
+                _store(path, schema).where(F.col("batch") == batch_id),
+                key,
+                F.max("v"),
             )
             recomputed_d = _digest(df, key)
-            if committed_d != recomputed_d:
+            if (n, h) != recomputed_d:
                 raise RuntimeError(
                     f"{run_key}: registry {path} already holds this "
                     f"batch's rows but they differ from the re-run "
-                    f"({committed_d} vs {recomputed_d}) — the batch "
+                    f"({(n, h)} vs {recomputed_d}) — the batch "
                     "input or spec changed under a committed registry "
                     "segment"
                 )
-            return
+            return _seg(path, v)
         if nonempty:
-            write_version(spark, df, path)
+            return _seg(path, write_version(spark, df, path))
+        return None
 
     stage_at = 1  # failure tracker: which INC_STAGES entry is running
     try:
@@ -580,7 +610,9 @@ def run_curation_incremental(
         # so a distinct would only add an aggregate stage.  ``o[0]``
         # also counts the batch's probe docs (``n_probe``); with the
         # lang count ``n2`` that says whether each registry write has
-        # rows, so emptiness no longer costs a job per registry.
+        # rows, so emptiness no longer costs a job per registry.  And
+        # a store is scanned for a segment of this batch only when
+        # the ledger cannot rule one out (``may_hold_own`` above).
         from pyspark.sql import Observation
         from pyspark.sql import Window as _W
 
@@ -613,7 +645,7 @@ def run_curation_incremental(
             _store(sigs_dir, _SIGS_SCHEMA)
             .where(F.col("batch") < batch_id)
             .select(F.col("sig").alias("_s"))
-            if _has(sigs_dir)
+            if has[sigs_dir]
             else None
         )
         novel = _cnt(
@@ -645,7 +677,7 @@ def run_curation_incremental(
             .where(F.col("batch") <= batch_id)
             .select("fp")
             .unionByName(own_probes)
-            if _has(probes_dir)
+            if has[probes_dir]
             else own_probes
         )
         fped = novel.withColumn("fp", _fp())
@@ -670,8 +702,8 @@ def run_curation_incremental(
 
         # ---- registry side effects --------------------------------
         # re-derived from the raw batch (observation-free subtrees —
-        # the observations are already consumed, and the own-segment
-        # checks use limit(1) actions that must not flow through
+        # the observations are already consumed, and each registry
+        # write is an action of its own that must not flow through
         # them).  Whether a registry write has rows comes from the
         # observed counts: the registered sigs are the distinct sigs
         # of the lang output, non-empty exactly when n2 > 0; the
@@ -687,12 +719,13 @@ def run_curation_incremental(
         # sigs→probes→segment), and the replay path heals each store
         # independently (idempotent _register digests + the own-seg
         # count check), so subset-vs-prefix is indistinguishable to
-        # recovery.
+        # recovery.  Each side effect returns the segment its stage's
+        # ledger row names.
         raw_u = batch_docs.select("doc_id", "text", "n_chars")
         lang_u = _stage_lang(spec, _stage_gopher(spec, raw_u))
 
-        def _reg_sigs() -> None:
-            _register(
+        def _reg_sigs() -> str | None:
+            return _register(
                 sigs_dir,
                 lang_u.withColumn("_s", _sig())
                 .select(F.col("_s").alias("sig"))
@@ -703,8 +736,8 @@ def run_curation_incremental(
                 nonempty=n2 > 0,
             )
 
-        def _reg_probes() -> None:
-            _register(
+        def _reg_probes() -> str | None:
+            return _register(
                 probes_dir,
                 _probe_fps(raw_u, spec).withColumn("batch", F.lit(batch_id)),
                 key="fp",
@@ -712,19 +745,19 @@ def run_curation_incremental(
                 nonempty=n_probe > 0,
             )
 
-        def _pub_corpus() -> None:
-            own_seg = _has(corpus_dir) and (
+        def _pub_corpus() -> str | None:
+            if may_hold_own[corpus_dir] and (
                 _store(corpus_dir, _BATCH_SCHEMA)
                 .where(F.col("batch") == batch_id)
                 .limit(1)
                 .count()
                 > 0
-            )
-            if own_seg:
-                n_pub = (
+            ):
+                n_pub, v = (
                     _store(corpus_dir, _BATCH_SCHEMA)
                     .where(F.col("batch") == batch_id)
-                    .count()
+                    .select(F.count(F.lit(1)), F.max("v"))
+                    .first()
                 )
                 if n_pub != n5:
                     raise RuntimeError(
@@ -733,12 +766,17 @@ def run_curation_incremental(
                         "batch input or spec changed under an already-"
                         "published segment"
                     )
-            elif n5:
-                write_version(spark, survivors, corpus_dir)
+                return _seg(corpus_dir, v)
+            if n5:
+                return _seg(
+                    corpus_dir, write_version(spark, survivors, corpus_dir)
+                )
+            return None
 
         from concurrent.futures import ThreadPoolExecutor
 
         side_effects = [(3, _reg_sigs), (4, _reg_probes), (6, _pub_corpus)]
+        segs: dict[int, str | None] = {}  # stage -> segment it published
         with ThreadPoolExecutor(max_workers=3) as pool:
             futures = [
                 (st, pool.submit(fn_)) for st, fn_ in side_effects
@@ -746,7 +784,7 @@ def run_curation_incremental(
             first_err: tuple[int, Exception] | None = None
             for st, fut in futures:
                 try:
-                    fut.result()
+                    segs[st] = fut.result()
                 except Exception as exc:  # noqa: BLE001 — re-raised below
                     if first_err is None or st < first_err[0]:
                         first_err = (st, exc)
@@ -777,7 +815,7 @@ def run_curation_incremental(
             "succeeded",
             counts[i - 1],
             counts[i],
-            corpus_dir if name == "publish" else None,
+            segs.get(i),
         )
         for i, name in enumerate(INC_STAGES, start=1)
     ]

@@ -26,6 +26,31 @@ if not all(_re.fullmatch(r"[a-z]+", w) for w in STOPWORDS):
 # (same regex semantics in Java regex and RE2 — keep it simple).
 BPE_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
+
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_lit(v: int | float | str) -> str:
+    """``v`` as SQL literal text that parses to the literal ``F.lit(v)``
+    builds: a double stays a double (``0.8D``, not the decimal
+    ``0.8``), and a string is quoted with its quotes and backslashes
+    escaped."""
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} {v!r}")
+
+
+def _sql_array(values) -> str:
+    """A literal SQL ``array(...)`` of strings."""
+    return "array(" + ", ".join(map(_sql_lit, values)) + ")"
+
+
 # Marker-word profiles for the language-ID heuristic.  A real system
 # ships char-n-gram profiles per language; the structure (score each
 # profile, argmax with deterministic tie-break) is identical.
@@ -122,27 +147,32 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     the token set per language; argmax with tie-break by profile order.
     Appends `lang_pred` and per-language scores.  Accuracy depends on
     the profiles; determinism and plan shape are the contract (tested
-    against a pandas reimplementation)."""
-    toks = F.array_distinct(_toks(F.col(text_col)))
-    out = df
-    score_cols = []
-    for lang, markers in LANG_MARKERS.items():
-        # toks is distinct, so array_intersect's dedup is harmless and
-        # the count equals the old filter(isin) lambda — but it runs
-        # as a native codegen'd collection expression, not an
-        # interpreted per-element HOF (same port as gopher_rules r7).
-        sc = F.size(
-            F.array_intersect(toks, F.array(*[F.lit(m) for m in markers]))
-        ).alias(f"score_{lang}")
-        score_cols.append(f"score_{lang}")
-        out = out.withColumn(f"score_{lang}", sc)
-    best = F.greatest(*[F.col(c) for c in score_cols])
-    pred = F.lit("und")
-    # reversed so the first profile wins ties deterministically
+    against a pandas reimplementation).
+
+    The columns are built from SQL text, one ``F.expr`` each: building
+    them as Column trees costs one py4j round trip per literal, and a
+    batch pipeline builds this chain on every batch."""
+    toks = f"array_distinct(split(trim({_ident(text_col)}), ' '))"
+    # toks is distinct, so array_intersect's dedup is harmless and the
+    # count equals the old filter(isin) lambda — but it runs as a
+    # native codegen'd collection expression, not an interpreted
+    # per-element HOF (same port as gopher_rules r7).
+    scores = {
+        f"score_{lang}": F.expr(
+            f"size(array_intersect({toks}, {_sql_array(markers)}))"
+        )
+        for lang, markers in LANG_MARKERS.items()
+    }
+    best = "greatest(" + ", ".join(_ident(c) for c in scores) + ")"
+    pred = "'und'"
+    # built inside out so the first profile wins ties deterministically
     for lang in reversed(list(LANG_MARKERS)):
-        pred = F.when(F.col(f"score_{lang}") == best, lang).otherwise(pred)
-    return out.withColumn(
-        "lang_pred", F.when(best > 0, pred).otherwise(F.lit("und"))
+        pred = (
+            f"CASE WHEN {_ident(f'score_{lang}')} = {best} "
+            f"THEN {_sql_lit(lang)} ELSE {pred} END"
+        )
+    return df.withColumns(scores).withColumn(
+        "lang_pred", F.expr(f"CASE WHEN {best} > 0 THEN {pred} ELSE 'und' END")
     )
 
 
@@ -1122,38 +1152,43 @@ def gopher_rules(
     scan speed and composes with predicate pushdown upstream.
     ``carry_cols`` names extra input columns to pass through (e.g.
     provenance keys a downstream rollup groups by) — carried in the
-    same projection, never a join-back.
+    same projection, never a join-back.  The projection is built from
+    SQL text in one ``selectExpr`` (column names backtick-quoted): as
+    Column trees it cost one py4j round trip per literal.
     """
-    toks = _toks(F.col(text_col))
-    n = F.size(toks)
-    n_d = n.cast("double")
-    mean_len = (F.length(F.trim(F.col(text_col))).cast("double") - (n_d - 1)) / n_d
-    n_alpha = F.regexp_count(
-        F.trim(F.col(text_col)), F.lit("(^| )[^ ]*[A-Za-z]")
+    text = f"trim({_ident(text_col)})"
+    toks = f"split({text}, ' ')"
+    n = f"size({toks})"
+    n_d = f"CAST({n} AS DOUBLE)"
+    mean_len = f"(CAST(length({text}) AS DOUBLE) - ({n_d} - 1)) / {n_d}"
+    alpha_frac = (
+        f"CAST(regexp_count({text}, {_sql_lit('(^| )[^ ]*[A-Za-z]')}) "
+        f"AS DOUBLE) / {n_d}"
     )
-    alpha_frac = n_alpha.cast("double") / n_d
-    stop_hits = F.size(
-        F.array_intersect(
-            F.array_distinct(toks),
-            F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
-        )
+    stop_hits = (
+        f"size(array_intersect(array_distinct({toks}), "
+        f"{_sql_array(GOPHER_STOPWORDS)}))"
     )
-    r_wc = (n >= min_words) & (n <= max_words)
-    r_ml = (mean_len >= min_mean_len) & (mean_len <= max_mean_len)
-    r_al = alpha_frac >= min_alpha_frac
-    r_sw = stop_hits >= min_stop_hits
-    return df.select(
-        id_col,
-        *carry_cols,
-        n.cast("long").alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        alpha_frac.alias("alpha_frac"),
-        stop_hits.cast("long").alias("stop_hits"),
-        r_wc.alias("r_word_count"),
-        r_ml.alias("r_mean_len"),
-        r_al.alias("r_alpha"),
-        r_sw.alias("r_stopwords"),
-        (r_wc & r_ml & r_al & r_sw).alias("keep"),
+    lit = _sql_lit
+    r_wc = f"({n} >= {lit(min_words)}) AND ({n} <= {lit(max_words)})"
+    r_ml = (
+        f"({mean_len} >= {lit(min_mean_len)}) "
+        f"AND ({mean_len} <= {lit(max_mean_len)})"
+    )
+    r_al = f"{alpha_frac} >= {lit(min_alpha_frac)}"
+    r_sw = f"{stop_hits} >= {lit(min_stop_hits)}"
+    return df.selectExpr(
+        _ident(id_col),
+        *map(_ident, carry_cols),
+        f"CAST({n} AS BIGINT) AS n_words",
+        f"{mean_len} AS mean_word_len",
+        f"{alpha_frac} AS alpha_frac",
+        f"CAST({stop_hits} AS BIGINT) AS stop_hits",
+        f"{r_wc} AS r_word_count",
+        f"{r_ml} AS r_mean_len",
+        f"{r_al} AS r_alpha",
+        f"{r_sw} AS r_stopwords",
+        f"({r_wc}) AND ({r_ml}) AND ({r_al}) AND ({r_sw}) AS keep",
     )
 
 

@@ -21,7 +21,7 @@ Exactly-once is CONTENT-level and rests on two properties:
 
 1. a segment directory rename is atomic (a crash mid-write leaves an
    unreferenced ``_stage.tmp.*`` the versioned vacuum reaps; readers
-   glob ``v=*`` and never see it);
+   read only ``v=NNNNN`` directories and never see it);
 2. a batch redelivered after a crash-between-side-effect-and-
    checkpoint-commit re-runs the anti-join against a corpus that now
    CONTAINS its fingerprints, so zero survivors remain and no second
@@ -87,23 +87,33 @@ def read_corpus(
     job each; with it the read launches none, ``v`` is still
     discovered from the segment paths (and read as the ``int`` data
     column it is in the compacted directory), and a subset of the
-    stored columns reads only those columns.  Either way, above 32
-    live segments (``spark.sql.sources.parallelPartitionDiscovery.
-    threshold``) each read pays one parallel-listing job; compaction
-    is the remedy."""
+    stored columns reads only those columns.
+
+    The live segments are read by their explicit ``v=NNNNN`` paths,
+    taken from this call's directory listing, not by a ``v=*`` glob:
+    a glob would also list every segment a compaction folded until
+    ``vacuum_corpus`` deletes it.  Above 32 listed segments
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) a
+    read pays one parallel-listing job; compaction is the remedy, and
+    it takes effect at once, before vacuum."""
     base = corpus_dir.rstrip("/")
     info = _base_info(spark, base)
+    upto = -1 if info is None else info[1]
+    live = [v for v in _version_dirs(spark, base) if v > upto]
 
     def _reader(sch: T.StructType | None):
         return spark.read if sch is None else spark.read.schema(sch)
 
     def _segments() -> DataFrame:
-        return _reader(schema).option("basePath", base).parquet(f"{base}/v=*")
+        # a store with no segment at all keeps the glob, which fails
+        # as a missing path
+        paths = [f"{base}/v={v:05d}" for v in live] or [f"{base}/v=*"]
+        return _reader(schema).option("basePath", base).parquet(*paths)
 
     if info is None:
         df = _segments()
     else:
-        c_num, upto = info
+        c_num = info[0]
         # a new StructType: StructType.add would mutate the caller's
         c_schema = (
             None
@@ -113,13 +123,10 @@ def read_corpus(
             )
         )
         df = _reader(c_schema).parquet(f"{base}/c={c_num:05d}")
-        if any(v > upto for v in _version_dirs(spark, base)):
-            live = (
-                _segments()
-                .where(F.col("v") > upto)
-                .withColumn("v", F.col("v").cast("int"))
+        if live:
+            df = df.unionByName(
+                _segments().withColumn("v", F.col("v").cast("int"))
             )
-            df = df.unionByName(live)
     if as_of is not None:
         df = df.where(F.col("v") <= as_of)
     return df
@@ -240,9 +247,9 @@ BASE_MARKER = "_BASE"
 
 def _base_info(spark: SparkSession, corpus_dir: str) -> tuple[int, int] | None:
     """Resolve the compaction commit pointer.  ABSENT marker → None
-    (never-compacted store, read the v=* glob).  PRESENT but
-    malformed marker → hard error: after a compaction+vacuum the v=*
-    glob no longer contains the folded rows, so falling back on a
+    (never-compacted store, read every v-segment).  PRESENT but
+    malformed marker → hard error: after a compaction+vacuum the
+    v-segments no longer contain the folded rows, so falling back on a
     torn/empty read would silently DROP compacted data from the scan
     — corruption must stop the reader, not shrink its input.
     (The marker is written atomically — ``_write_text_atomic`` —
@@ -366,7 +373,7 @@ def vacuum_corpus(
 
     ``retain_ms`` is the same guard for READERS: a reader that
     resolved ``_BASE`` just before the compaction committed plans its
-    scan over the v=* glob, and deleting the folded v-dirs under it
+    scan over the v-segments, and deleting the folded v-dirs under it
     mid-scan turns into FileNotFoundException.  Superseded v-dirs
     (and dead c-dirs) are therefore kept until at least ``retain_ms``
     has passed since the ``_BASE`` flip that superseded them — size

@@ -569,10 +569,9 @@ def test_incremental_batch_gopher_drops_registers_nothing(spark, tmp_path):
         .where(F.col("run_id") == "i10@b000")
         .collect()
     )
+    # stages 3, 4 and 6 name the segment they published: none here
     assert led == [
-        (st, n, "succeeded", i, o,
-         f"{store}/corpus" if n == "publish" else None)
-        for st, n, i, o in expected
+        (st, n, "succeeded", i, o, None) for st, n, i, o in expected
     ]
     for sub in ("sigs", "probes", "corpus"):
         assert _seg_dirs(f"{store}/{sub}") == [], sub
@@ -581,7 +580,7 @@ def test_incremental_batch_gopher_drops_registers_nothing(spark, tmp_path):
 #: Spark jobs of one warm ``run_curation_incremental`` batch (the third
 #: of three) over the sf0.001 documents (measured; equality, so an added
 #: job fails here, and a removed one must re-pin the count)
-CURATE_BATCH_JOBS = 18
+CURATE_BATCH_JOBS = 12
 
 
 def test_incremental_warm_batch_job_count(spark, tmp_path):
@@ -611,3 +610,178 @@ def test_incremental_warm_batch_job_count(spark, tmp_path):
     )
     assert not res["replayed"]
     assert n_jobs == CURATE_BATCH_JOBS, n_jobs
+
+
+_STORES = ("sigs", "probes", "corpus")
+#: the store each segment-publishing stage names in its ledger row
+_STAGE_STORE = {3: "sigs", 4: "probes", 6: "corpus"}
+
+
+def _out_paths(cat, run_key):
+    return {
+        r["stage"]: r["out_path"]
+        for r in cat.read(C.LEDGER_TABLE)
+        .where(
+            (F.col("run_id") == run_key) & (F.col("status") == "succeeded")
+        )
+        .collect()
+    }
+
+
+def _store_rows(spark, store):
+    from aws_datalake_framework_ingestion_spark.streaming.shard_append import (
+        read_corpus,
+    )
+
+    return {
+        sub: sorted(map(tuple, read_corpus(spark, f"{store}/{sub}").collect()))
+        for sub in _STORES
+    }
+
+
+def test_incremental_crashed_batch_replayed_after_next_commit_heals(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 0 dies after publishing its segments but before its ledger
+    commit, batch 1 commits, then batch 0 is replayed.  No committed
+    row names batch 0's segments, so the replay scans, finds them and
+    publishes no second segment; both funnels, the stores and the
+    segments the ledger rows name equal an uninterrupted run's."""
+    docs = _docs(spark)
+    batches = [docs.where(F.col("doc_id") % 3 == b) for b in range(2)]
+    spec = _inc_spec("i12")
+    ref_cat = Catalog(spark, str(tmp_path / "ref_cat"))
+    ref_store = str(tmp_path / "ref_store")
+    ref = [
+        C.run_curation_incremental(ref_cat, spec, batches[b], ref_store, b)
+        for b in range(2)
+    ]
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    store = str(tmp_path / "store")
+    real_insert = Catalog.insert
+
+    class Boom(RuntimeError):
+        pass
+
+    def dies_at_b0_commit(self, table, rows):
+        if (
+            table == C.LEDGER_TABLE
+            and rows[0]["run_id"] == "i12@b000"
+            and rows[0]["status"] == "succeeded"
+        ):
+            raise Boom("die before ledger commit")
+        return real_insert(self, table, rows)
+
+    monkeypatch.setattr(Catalog, "insert", dies_at_b0_commit)
+    with pytest.raises(Boom):
+        C.run_curation_incremental(cat, spec, batches[0], store, 0)
+    monkeypatch.setattr(Catalog, "insert", real_insert)
+    f1 = C.run_curation_incremental(cat, spec, batches[1], store, 1)
+    segs = {sub: _seg_dirs(f"{store}/{sub}") for sub in _STORES}
+    assert segs == {sub: ["v=00001", "v=00002"] for sub in _STORES}
+    f0 = C.run_curation_incremental(cat, spec, batches[0], store, 0)
+    assert not f0["replayed"]
+    assert {sub: _seg_dirs(f"{store}/{sub}") for sub in _STORES} == segs
+    assert [f0["funnel"], f1["funnel"]] == [r["funnel"] for r in ref]
+    assert _store_rows(spark, store) == _store_rows(spark, ref_store)
+    for b in range(2):
+        key = f"i12@b{b:03d}"
+        got = _out_paths(cat, key)
+        assert got == {
+            st: p and p.replace(ref_store, store)
+            for st, p in _out_paths(ref_cat, key).items()
+        }
+        # batch 0 published v=00001 of each store, batch 1 v=00002
+        assert {st: got[st] for st in _STAGE_STORE} == {
+            st: f"{store}/{sub}/v={b + 1:05d}"
+            for st, sub in _STAGE_STORE.items()
+        }
+
+
+def test_incremental_scan_runs_only_on_unnamed_segments(
+    spark, tmp_path, monkeypatch
+):
+    """A fresh batch whose history's rows name every segment reads no
+    store to look for a segment of its own.  History whose committed
+    rows name no segment (legacy rows: the publish row's out_path is
+    the corpus directory, the others None) keeps the scan of every
+    store.  Both runs commit the same funnels and segments."""
+    from aws_datalake_framework_ingestion_spark.streaming import (
+        shard_append as SA,
+    )
+
+    docs = _docs(spark)
+    batches = [docs.where(F.col("doc_id") % 3 == b) for b in range(2)]
+    real_insert = Catalog.insert
+    real_read = SA.read_corpus
+
+    def run_two(name: str, legacy: bool):
+        cat = Catalog(spark, str(tmp_path / f"cat_{name}"))
+        store = str(tmp_path / f"store_{name}")
+        spec = _inc_spec(name)
+
+        def legacy_insert(self, table, rows):
+            if table == C.LEDGER_TABLE and rows[0]["status"] == "succeeded":
+                rows = [
+                    {**r, "out_path": f"{store}/corpus"
+                     if r["name"] == "publish" else None}
+                    for r in rows
+                ]
+            return real_insert(self, table, rows)
+
+        reads: dict[str, int] = {}
+
+        def counting_read(spark_, path, *a, **k):
+            sub = os.path.basename(path.rstrip("/"))
+            reads[sub] = reads.get(sub, 0) + 1
+            return real_read(spark_, path, *a, **k)
+
+        with monkeypatch.context() as m:
+            if legacy:
+                m.setattr(Catalog, "insert", legacy_insert)
+            f0 = C.run_curation_incremental(cat, spec, batches[0], store, 0)
+        with monkeypatch.context() as m:
+            m.setattr(SA, "read_corpus", counting_read)
+            f1 = C.run_curation_incremental(cat, spec, batches[1], store, 1)
+        assert {sub: _seg_dirs(f"{store}/{sub}") for sub in _STORES} == {
+            sub: ["v=00001", "v=00002"] for sub in _STORES
+        }
+        return [f0["funnel"], f1["funnel"]], reads
+
+    named_funnels, named_reads = run_two("i13", legacy=False)
+    legacy_funnels, legacy_reads = run_two("i13l", legacy=True)
+    # the sigs and probes reads build the two anti-joins; each scan
+    # adds one read of its store
+    assert named_reads == {"sigs": 1, "probes": 1}
+    assert legacy_reads == {"sigs": 2, "probes": 2, "corpus": 1}
+    assert legacy_funnels == named_funnels
+
+
+#: py4j round trips of one warm ``_stage_lang(_stage_gopher(...))``
+#: build, the chain a batch builds twice (measured; equality, like the
+#: job count).  Built as Column trees, one round trip per literal, the
+#: same chain took 1,055.
+STAGE_BUILD_ROUND_TRIPS = 128
+
+
+def test_gopher_lang_build_round_trips(spark, monkeypatch):
+    docs = _docs(spark).select("doc_id", "text", "n_chars")
+    spec = _inc_spec("rt")
+
+    def build():
+        return C._stage_lang(spec, C._stage_gopher(spec, docs))
+
+    build()  # the first build also resolves JVM classes and methods
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert len(calls) == STAGE_BUILD_ROUND_TRIPS, len(calls)

@@ -98,29 +98,104 @@ def test_embedding_dedup_pairs_threshold(spark, emb):
         assert r["id_a"] < r["id_b"]
 
 
+def _ref_lang_pred(text: str, profiles: dict) -> str:
+    toks = set(text.strip().split(" "))
+    scores = {lang: len(toks & set(m)) for lang, m in profiles.items()}
+    best = max(scores.values())
+    if best == 0:
+        return "und"
+    for lang in profiles:  # first profile wins ties
+        if scores[lang] == best:
+            return lang
+    return "und"
+
+
+def _ref_gopher(text: str, stopwords) -> dict:
+    """Python reference of text.gopher_rules' per-doc columns at its
+    default thresholds."""
+    import re
+
+    t = text.strip(" ")
+    toks = t.split(" ")
+    n = len(toks)
+    mean_len = (float(len(t)) - (float(n) - 1)) / float(n)
+    alpha = float(sum(1 for w in toks if re.search("[A-Za-z]", w))) / float(n)
+    stop = len(set(toks) & set(stopwords))
+    rules = {
+        "r_word_count": 50 <= n <= 100_000,
+        "r_mean_len": 3.0 <= mean_len <= 10.0,
+        "r_alpha": alpha >= 0.8,
+        "r_stopwords": stop >= 2,
+    }
+    return {
+        "n_words": n,
+        "mean_word_len": mean_len,
+        "alpha_frac": alpha,
+        "stop_hits": stop,
+        **rules,
+        "keep": all(rules.values()),
+    }
+
+
 def test_lang_id_matches_pandas_reimpl(spark, docs):
     got = {
         r["doc_id"]: r["lang_pred"]
         for r in X.lang_id(docs).select("doc_id", "lang_pred").collect()
     }
     pdf = docs.select("doc_id", "text").toPandas()
-
-    def ref_pred(text: str) -> str:
-        toks = set(text.strip().split(" "))
-        scores = {
-            lang: len(toks & set(markers))
-            for lang, markers in X.LANG_MARKERS.items()
-        }
-        best = max(scores.values())
-        if best == 0:
-            return "und"
-        for lang in X.LANG_MARKERS:  # first profile wins ties
-            if scores[lang] == best:
-                return lang
-        return "und"
-
     for _, row in pdf.iterrows():
-        assert got[row["doc_id"]] == ref_pred(row["text"]), row["doc_id"]
+        assert got[row["doc_id"]] == _ref_lang_pred(
+            row["text"], X.LANG_MARKERS
+        ), row["doc_id"]
+
+
+def test_text_builders_quote_names_and_literals(spark, docs, monkeypatch):
+    """gopher_rules and lang_id build their columns from SQL text.  A
+    text column whose name needs backticks (a space, a backtick and a
+    dot) and marker / stopword lists holding a quote and a backslash
+    give the outputs of the Python references."""
+    odd = ("o'clock", "back\\slash")
+    profiles = {**X.LANG_MARKERS, "en": ("the", "a", *odd)}
+    stopwords = ("the", "of", *odd)
+    monkeypatch.setattr(X, "LANG_MARKERS", profiles)
+    monkeypatch.setattr(X, "GOPHER_STOPWORDS", stopwords)
+    planted = [
+        "o'clock back\\slash " + " ".join(f"word{i}" for i in range(60)),
+        "o'clock the " + " ".join(f"word{i}" for i in range(60)),
+        "oclock backslash el la de " + " ".join(f"w{i}" for i in range(60)),
+    ]
+    text_col, id_col = "body `text`.v", "doc id"
+    frame = (
+        docs.select("doc_id", "text")
+        .unionByName(
+            spark.createDataFrame(
+                [(-1 - i, t) for i, t in enumerate(planted)],
+                "doc_id long, text string",
+            )
+        )
+        .toDF(id_col, text_col)
+    )
+    pdf = frame.toPandas()
+    want = {
+        r[id_col]: (_ref_lang_pred(r[text_col], profiles),
+                    _ref_gopher(r[text_col], stopwords))
+        for _, r in pdf.iterrows()
+    }
+    langs = {
+        r[0]: r[1]
+        for r in X.lang_id(frame, text_col=text_col)
+        .select(id_col, "lang_pred")
+        .collect()
+    }
+    gopher = {
+        r[id_col]: {k: v for k, v in r.asDict().items() if k != id_col}
+        for r in X.gopher_rules(frame, id_col=id_col, text_col=text_col)
+        .collect()
+    }
+    assert {i: (langs[i], gopher[i]) for i in want} == want
+    # the planted docs hit the quoted markers and stopwords
+    assert [want[-1 - i][0] for i in range(3)] == ["en", "en", "es"]
+    assert [want[-1 - i][1]["stop_hits"] for i in range(3)] == [2, 2, 0]
 
 
 def test_approx_distinct_error(spark):

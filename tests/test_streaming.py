@@ -668,6 +668,56 @@ def test_corpus_compaction_preserves_union_and_appendability(spark, tmp_path):
     assert append_batch(spark, mk(batches[0]), corpus) == 0
 
 
+def test_read_corpus_after_compaction_lists_only_live_segments(
+    spark, tmp_path
+):
+    """Compaction cuts the listing cost before vacuum runs: with 40
+    folded segments still on disk and one appended after them, a
+    read_corpus with a declared schema launches no Spark job (a v=*
+    glob lists all 41 directories, past the 32-path threshold of
+    parallel partition discovery) and returns every row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_datalake_framework_ingestion_spark.sources.versioned import (
+        write_version,
+    )
+    from aws_datalake_framework_ingestion_spark.streaming.shard_append import (
+        compact_corpus,
+        read_corpus,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    for v in range(1, 41):
+        os.makedirs(f"{corpus}/v={v:05d}")
+        pq.write_table(
+            pa.table({"doc_id": [v], "text": [f"doc {v}"]}),
+            f"{corpus}/v={v:05d}/part-0.parquet",
+        )
+    assert compact_corpus(spark, corpus)["n_live_segments_folded"] == 40
+    appended = spark.createDataFrame(
+        [(41, "doc 41")], "doc_id long, text string"
+    )
+    assert write_version(spark, appended, corpus) == 41
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    sc = spark.sparkContext
+    group = f"read_corpus_{os.getpid()}"
+    sc.setJobGroup(group, "read_corpus after compaction")
+    try:
+        df = read_corpus(spark, corpus, schema=schema)
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(map(tuple, df.select("doc_id", "v").collect())) == [
+        (v, v) for v in range(1, 42)
+    ]
+
+
 def test_corpus_compaction_crash_invisible_and_generations_chain(
     spark, tmp_path
 ):
