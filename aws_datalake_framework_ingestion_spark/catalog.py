@@ -122,16 +122,9 @@ class Catalog:
         return f"{self.root.rstrip('/')}/{table}"
 
     def exists(self, table: str) -> bool:
-        fs, jvm = self._fs()
-        P = jvm.org.apache.hadoop.fs.Path
-        d = P(self._dir(table))
-        if not fs.exists(d) or not fs.getFileStatus(d).isDirectory():
-            return False
-        it = fs.listFiles(d, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                return True
-        return False
+        from .sources.files import holds_table
+
+        return holds_table(self.spark, self._dir(table))
 
     # -- DDL (R13-R16) --------------------------------------------------
     def create(self, table: str, schema: T.StructType | None = None) -> None:

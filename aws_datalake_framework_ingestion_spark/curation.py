@@ -182,16 +182,17 @@ FINAL_STAGE = "shards"
 
 
 def _ledger_row(
+    run_id: str,
     spec: CurationSpec,
     stage: int,
     name: str,
     status: str,
     n_in: int | None,
-    n_out: int | None,
-    out_path: str | None,
+    n_out: int | None = None,
+    out_path: str | None = None,
 ) -> dict:
     return {
-        "run_id": spec.run_id,
+        "run_id": run_id,
         "stage": stage,
         "name": name,
         "status": status,
@@ -262,40 +263,34 @@ def run_curation(
                 if name == "contamination"
                 else fn(spec, cur)
             )
-            # n_out rides the write job as an observed metric instead
-            # of a separate read-back count job (r14 optimization —
-            # one less Spark action per stage; the write is the only
-            # action, so the observation sees every output row
-            # exactly once)
+            # n_out rides the write job as an observed metric: the
+            # write is the only action, so the observation sees every
+            # output row exactly once
             from pyspark.sql import Observation
 
             obs = Observation()
             out = out.observe(obs, F.count(F.lit(1)).alias("n"))
             # mode=overwrite clobbers any partial directory a previous
             # crash left — the ledger row below, not the directory, is
-            # the commit marker.  r14: size each materialized stage to
-            # advisory-sized files instead of one file per shuffle
-            # partition (guide §6 — the next stage, and any resume,
-            # re-reads this directory).  r15: size-conditional — a
-            # small estimated stage coalesces to one file with no
-            # extra exchange (sized_for_publish; the Observation rides
-            # the write either way).
+            # the commit marker.  The stage is written through the
+            # publish size rule (the next stage, and any resume,
+            # re-reads this directory).
             sized_for_publish(out).write.mode("overwrite").parquet(
                 out_path
             )
         except Exception:
             catalog.insert(
                 LEDGER_TABLE,
-                [_ledger_row(spec, i, name, "failed", n_in, None, None)],
+                [_ledger_row(spec.run_id, spec, i, name, "failed", n_in)],
             )
             raise
         cur = spark.read.parquet(out_path)
         n_out = int(obs.get["n"])
         n_carry = n_out
-        catalog.insert(
-            LEDGER_TABLE,
-            [_ledger_row(spec, i, name, "succeeded", n_in, n_out, out_path)],
+        row = _ledger_row(
+            spec.run_id, spec, i, name, "succeeded", n_in, n_out, out_path
         )
+        catalog.insert(LEDGER_TABLE, [row])
         stages_run.append(name)
         if on_stage_complete:
             on_stage_complete(name)
@@ -321,30 +316,17 @@ def run_curation(
                 spark, cur, shard_dir, budget=spec.shard_budget
             )
         except Exception:
-            catalog.insert(
-                LEDGER_TABLE,
-                [
-                    _ledger_row(
-                        spec, n_final, FINAL_STAGE, "failed", n_in, None, None
-                    )
-                ],
+            row = _ledger_row(
+                spec.run_id, spec, n_final, FINAL_STAGE, "failed", n_in
             )
+            catalog.insert(LEDGER_TABLE, [row])
             raise
         n_out = manifest.count()
-        catalog.insert(
-            LEDGER_TABLE,
-            [
-                _ledger_row(
-                    spec,
-                    n_final,
-                    FINAL_STAGE,
-                    "succeeded",
-                    n_in,
-                    n_out,
-                    shard_dir,
-                )
-            ],
+        row = _ledger_row(
+            spec.run_id, spec, n_final, FINAL_STAGE, "succeeded", n_in, n_out,
+            shard_dir,
         )
+        catalog.insert(LEDGER_TABLE, [row])
         stages_run.append(FINAL_STAGE)
         if on_stage_complete:
             on_stage_complete(FINAL_STAGE)
@@ -362,9 +344,8 @@ def run_curation(
 # Incremental (delta-batch) curation — the 24/7 "daily delta" posture
 # --------------------------------------------------------------------------
 
-#: data schemas of the three stores run_curation_incremental writes
-#: (read back with them, so no read infers a schema); the corpus
-#: own-segment check needs only the batch tag
+#: data schemas of the sig and probe registries (read back with them,
+#: so no read infers a schema)
 _BATCH_FIELD = T.StructField("batch", T.IntegerType())
 _SIGS_SCHEMA = T.StructType(
     [T.StructField("sig", T.StringType()), _BATCH_FIELD]
@@ -372,7 +353,6 @@ _SIGS_SCHEMA = T.StructType(
 _PROBES_SCHEMA = T.StructType(
     [T.StructField("fp", T.StringType()), _BATCH_FIELD]
 )
-_BATCH_SCHEMA = T.StructType([_BATCH_FIELD])
 
 INC_STAGES: tuple[str, ...] = (
     "gopher_rules",
@@ -406,9 +386,8 @@ def run_curation_incremental(
     yesterday's output is published and immutable and only today's
     arrivals are processed.
 
-    Composes the two r11 end-to-end gates: run_curation's per-stage
-    ledger contract (reference DAG statuses,
-    dl_fmwrk_dag_template.py:39-113) applied per BATCH, and
+    Composes run_curation's per-stage ledger contract (reference DAG
+    statuses, dl_fmwrk_dag_template.py:39-113) applied per BATCH, and
     streaming/shard_append.py's versioned-segment publish.
 
     Semantics (deliberately weaker than the one-shot pipeline, and
@@ -432,16 +411,18 @@ def run_curation_incremental(
       id.
 
     Crash-safety: the batch's SIX ledger rows are appended as one
-    atomic insert AFTER the segment publish — the batch is the commit
+    atomic insert AFTER the store publishes — the batch is the commit
     unit.  Every pre-publish stage is deterministic and the
     sig-registry anti-join excludes the batch's own rows (`batch <
-    batch_id`), so a crash anywhere re-runs to the same survivors; a
-    crash between segment-write and ledger-append is healed by the
-    own-segment check (segment present ⇒ skip the write, verify the
-    recomputed count matches), and the same drift check guards the
-    registry stores (a replay with CHANGED batch input raises instead
-    of silently leaving the changed rows unregistered).  The ledger
-    rows of stages 3, 4 and 6 name the segment each published
+    batch_id`), so a crash anywhere re-runs to the same survivors.  A
+    crash between a segment write and the ledger append is healed by
+    one check that all three stores share: one aggregate over the
+    store's rows of this batch gives their count, content digest (over
+    ``sig``, ``fp`` or ``doc_id``) and segment; a segment present ⇒
+    skip the write and require the recomputed rows' count and digest
+    to equal it, so a replay with CHANGED batch input raises instead
+    of silently keeping the old rows.  The ledger rows of stages 3, 4
+    and 6 name the segment each published
     (``{store_root}/sigs/v=00012``; None when it published none), so
     the check scans a store only when it holds a segment that no
     committed row of the pipeline names, or a compaction base: only a
@@ -458,7 +439,21 @@ def run_curation_incremental(
 
     Returns {run_key, replayed, funnel: [(stage, name, n_in, n_out)]}.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import Observation
+    from pyspark.sql import Window as _W
+
     from .sources.versioned import _version_dirs, write_version
+
+    # store reads go through the compaction-aware union reader: the
+    # sigs/probes registries and the curated corpus are exactly the
+    # stores that accrete one segment per batch, so they must stay
+    # readable after shard_append.compact_corpus/vacuum_corpus folds
+    # their history behind a _BASE commit
+    from .streaming.shard_append import _base_info as _store_base
+    from .streaming.shard_append import read_corpus as _read_store
 
     spark = catalog.spark
     if not catalog.exists(LEDGER_TABLE):
@@ -500,14 +495,6 @@ def run_curation_incremental(
     probes_dir = posixpath.join(store_root, "probes")
     sigs_dir = posixpath.join(store_root, "sigs")
 
-    # store reads go through the compaction-aware union reader: the
-    # sigs/probes registries and the curated corpus are exactly the
-    # stores that accrete one segment per batch, so they must stay
-    # readable after shard_append.compact_corpus/vacuum_corpus folds
-    # their history behind a _BASE commit
-    from .streaming.shard_append import _base_info as _store_base
-    from .streaming.shard_append import read_corpus as _read_store
-
     def _seg(path: str, v: int) -> str:
         """The name a ledger row gives segment ``v`` of store ``path``."""
         return posixpath.join(path, f"v={v:05d}")
@@ -532,57 +519,45 @@ def run_curation_incremental(
     def _store(path: str, schema: T.StructType) -> DataFrame:
         return _read_store(spark, path, schema=schema)
 
-    def _digest(df: DataFrame, key: str, *extra):
-        """(count, decimal-exact 56-bit content sum) over one column —
-        the order-free drift detector (1-row aggregate) — followed by
-        the ``extra`` aggregates."""
+    def _digest(df: DataFrame, key: str, *extra) -> tuple:
+        """(count, decimal-exact 56-bit content sum) over ``key`` — the
+        order-free drift detector (1-row aggregate) — followed by the
+        ``extra`` aggregates."""
+        md5 = F.md5(F.col(key).cast("string"))
+        h = F.conv(F.substring(md5, 1, 14), 16, 10).cast("decimal(38,0)")
         return tuple(
             df.select(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.conv(F.substring(F.md5(F.col(key)), 1, 14), 16, 10)
-                    .cast("decimal(38,0)")
-                ).alias("h"),
+                F.sum(h).alias("h"),
                 *extra,
             ).first()
         )
 
-    def _register(
-        path: str,
-        df: DataFrame,
-        key: str,
-        schema: T.StructType,
-        nonempty: bool,
+    def _publish(
+        path: str, df: DataFrame, key: str, nonempty: bool
     ) -> str | None:
-        """Idempotently append this batch's rows to a versioned store;
-        returns the segment that holds them (None when there are
-        none).  When a segment tagged with this batch already exists
-        (the replay-after-crash seam) the recomputed rows must MATCH
-        it — a replay with changed batch input would otherwise
-        silently leave the changed rows unregistered.  ``nonempty`` is
-        whether ``df`` has rows, known from the batch's observed
-        counts."""
-        if may_hold_own[path] and (
-            _store(path, schema)
-            .where(F.col("batch") == batch_id)
-            .limit(1)
-            .count()
-        ):
-            n, h, v = _digest(
-                _store(path, schema).where(F.col("batch") == batch_id),
-                key,
-                F.max("v"),
+        """Idempotently append this batch's rows ``df`` to the store at
+        ``path``; returns the segment that holds them (None when there
+        are none).  A segment of this batch already in the store (the
+        replay-after-crash seam) is kept, and the recomputed rows must
+        match its count and content digest over ``key``.  ``nonempty``
+        is whether ``df`` has rows, known from the observed counts."""
+        if may_hold_own[path]:
+            schema = T.StructType(
+                [T.StructField(key, df.schema[key].dataType), _BATCH_FIELD]
             )
-            recomputed_d = _digest(df, key)
-            if (n, h) != recomputed_d:
-                raise RuntimeError(
-                    f"{run_key}: registry {path} already holds this "
-                    f"batch's rows but they differ from the re-run "
-                    f"({(n, h)} vs {recomputed_d}) — the batch "
-                    "input or spec changed under a committed registry "
-                    "segment"
-                )
-            return _seg(path, v)
+            own = _store(path, schema).where(F.col("batch") == batch_id)
+            n, h, v = _digest(own, key, F.max("v"))
+            if n:  # n == 0: the store holds no segment of this batch
+                again = _digest(df, key)
+                if (n, h) != again:
+                    raise RuntimeError(
+                        f"{run_key}: {path} already holds this batch's "
+                        f"rows but they differ from the re-run "
+                        f"({(n, h)} vs {again}) — the batch input or spec "
+                        "changed under a committed segment"
+                    )
+                return _seg(path, v)
         if nonempty:
             return _seg(path, write_version(spark, df, path))
         return None
@@ -590,32 +565,20 @@ def run_curation_incremental(
     stage_at = 1  # failure tracker: which INC_STAGES entry is running
     try:
         # ---- ONE evaluation of the whole per-batch chain -----------
-        # r14 optimization: the six per-stage persist+count pairs
-        # (≈12 Spark actions per batch) collapse into ONE job.  Each
-        # stage boundary carries an Observation, so the single
-        # materializing action (survivors.count) reports every
-        # funnel cardinality as observed metrics of the one pass;
-        # the registry/segment side effects run AFTERWARD from the
-        # already-consumed observations (same commit order as
-        # before: sigs → probes → segment → ledger).  Stage
-        # results are identical to the previous per-stage build —
-        # only the action count changed.
+        # Each stage boundary carries an Observation, so the single
+        # materializing action (survivors.count) reports every funnel
+        # cardinality as observed metrics of the one pass.  The store
+        # publishes run afterwards from the consumed observations;
+        # commit order: the three store publishes, then the ledger
+        # append.
         #
-        # Nor does the batch launch a job whose answer it already
-        # has.  The stores are read with their declared schemas, so
-        # no read runs a schema-inference job.  Neither anti-join
-        # build side (``seen``, ``probes``) is made distinct: a
-        # left_anti keeps a row exactly when its key is ABSENT from
-        # the build side, which duplicate keys there cannot change,
-        # so a distinct would only add an aggregate stage.  ``o[0]``
-        # also counts the batch's probe docs (``n_probe``); with the
-        # lang count ``n2`` that says whether each registry write has
-        # rows, so emptiness no longer costs a job per registry.  And
-        # a store is scanned for a segment of this batch only when
-        # the ledger cannot rule one out (``may_hold_own`` above).
-        from pyspark.sql import Observation
-        from pyspark.sql import Window as _W
-
+        # Neither anti-join build side (``seen``, ``probes``) is made
+        # distinct: a left_anti keeps a row exactly when its key is
+        # ABSENT from the build side, which duplicate keys there
+        # cannot change, so a distinct would only add an aggregate
+        # stage.  ``o[0]`` also counts the batch's probe docs
+        # (``n_probe``); with the lang count ``n2`` that says whether
+        # each registry write has rows.
         o = [Observation() for _ in range(6)]
 
         def _cnt(df: DataFrame, i: int, *extra) -> DataFrame:
@@ -658,17 +621,15 @@ def run_curation_incremental(
         # ---- cumulative-probe contamination scrub ------------------
         stage_at = 4
         # The scrub must see all probe fps up to AND INCLUDING this
-        # batch (no-revocation rule).  The old order registered this
-        # batch's fps first and read them back from the store; the
-        # single-eval order instead builds the identical key set as
-        # (store rows with batch <= id) ∪ (this batch's fps computed
-        # from the raw batch).  The own-fps subtree deliberately
-        # re-derives from ``batch_docs`` (NOT the observed ``base``
-        # node): the probe relation is a broadcast-side branch of the
-        # same action, and routing it through the observation node
-        # would double-count n0 when both branches evaluate.  For the
-        # same reason ``n_probe`` is counted on ``base`` only, which
-        # the main branch evaluates once.
+        # batch (no-revocation rule): (store rows with batch <= id) ∪
+        # (this batch's fps computed from the raw batch).  The own-fps
+        # subtree deliberately re-derives from ``batch_docs`` (NOT the
+        # observed ``base`` node): the probe relation is a
+        # broadcast-side branch of the same action, and routing it
+        # through the observation node would double-count n0 when both
+        # branches evaluate.  For the same reason ``n_probe`` is
+        # counted on ``base`` only, which the main branch evaluates
+        # once.
         own_probes = batch_docs.where(_is_probe(spec)).select(
             _fp().alias("fp")
         )
@@ -700,127 +661,64 @@ def run_curation_incremental(
         n_probe = int(o[0].get["n_probe"])
         stage_at = 3
 
-        # ---- registry side effects --------------------------------
-        # re-derived from the raw batch (observation-free subtrees —
-        # the observations are already consumed, and each registry
-        # write is an action of its own that must not flow through
-        # them).  Whether a registry write has rows comes from the
-        # observed counts: the registered sigs are the distinct sigs
-        # of the lang output, non-empty exactly when n2 > 0; the
-        # registered probe fps are non-empty exactly when the batch
-        # holds a probe doc (n_probe > 0).
-        # r14 (guide §2.6, overlap independent jobs): the three store
-        # publishes touch DISJOINT stores and none reads another's
-        # output, so they run as three concurrent driver threads —
-        # the batch's commit point stays the ledger append below,
-        # which still happens only after ALL three have succeeded.
-        # Crash-wise nothing changes: any SUBSET of the three stores
-        # may exist at a crash (previously any prefix of
-        # sigs→probes→segment), and the replay path heals each store
-        # independently (idempotent _register digests + the own-seg
-        # count check), so subset-vs-prefix is indistinguishable to
-        # recovery.  Each side effect returns the segment its stage's
-        # ledger row names.
+        # ---- store publishes ---------------------------------------
+        # The registry rows are re-derived from the raw batch
+        # (observation-free subtrees: each publish is an action of its
+        # own that must not flow through the consumed observations).
+        # The registered sigs are the distinct sigs of the lang
+        # output, non-empty exactly when n2 > 0; the registered probe
+        # fps are non-empty exactly when the batch holds a probe doc.
+        # The three stores are disjoint and none reads another's
+        # output, so the publishes run concurrently, each on a thread
+        # that carries the caller's job group.  The commit point stays
+        # the ledger append below, after ALL three have succeeded; a
+        # crash may leave any subset of the stores published, and
+        # ``_publish`` heals each store on its own.
         raw_u = batch_docs.select("doc_id", "text", "n_chars")
         lang_u = _stage_lang(spec, _stage_gopher(spec, raw_u))
-
-        def _reg_sigs() -> str | None:
-            return _register(
+        publishes = {
+            3: lambda: _publish(
                 sigs_dir,
-                lang_u.withColumn("_s", _sig())
-                .select(F.col("_s").alias("sig"))
+                lang_u.select(_sig().alias("sig"))
                 .distinct()
                 .withColumn("batch", F.lit(batch_id)),
-                key="sig",
-                schema=_SIGS_SCHEMA,
-                nonempty=n2 > 0,
-            )
-
-        def _reg_probes() -> str | None:
-            return _register(
+                "sig",
+                n2 > 0,
+            ),
+            4: lambda: _publish(
                 probes_dir,
                 _probe_fps(raw_u, spec).withColumn("batch", F.lit(batch_id)),
-                key="fp",
-                schema=_PROBES_SCHEMA,
-                nonempty=n_probe > 0,
-            )
-
-        def _pub_corpus() -> str | None:
-            if may_hold_own[corpus_dir] and (
-                _store(corpus_dir, _BATCH_SCHEMA)
-                .where(F.col("batch") == batch_id)
-                .limit(1)
-                .count()
-                > 0
-            ):
-                n_pub, v = (
-                    _store(corpus_dir, _BATCH_SCHEMA)
-                    .where(F.col("batch") == batch_id)
-                    .select(F.count(F.lit(1)), F.max("v"))
-                    .first()
-                )
-                if n_pub != n5:
-                    raise RuntimeError(
-                        f"{run_key}: committed segment holds {n_pub} docs "
-                        f"but the deterministic re-run produced {n5} — the "
-                        "batch input or spec changed under an already-"
-                        "published segment"
-                    )
-                return _seg(corpus_dir, v)
-            if n5:
-                return _seg(
-                    corpus_dir, write_version(spark, survivors, corpus_dir)
-                )
-            return None
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        side_effects = [(3, _reg_sigs), (4, _reg_probes), (6, _pub_corpus)]
-        segs: dict[int, str | None] = {}  # stage -> segment it published
+                "fp",
+                n_probe > 0,
+            ),
+            6: lambda: _publish(corpus_dir, survivors, "doc_id", n5 > 0),
+        }
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [
-                (st, pool.submit(fn_)) for st, fn_ in side_effects
-            ]
-            first_err: tuple[int, Exception] | None = None
-            for st, fut in futures:
-                try:
-                    segs[st] = fut.result()
-                except Exception as exc:  # noqa: BLE001 — re-raised below
-                    if first_err is None or st < first_err[0]:
-                        first_err = (st, exc)
-            if first_err is not None:
-                stage_at = first_err[0]
-                raise first_err[1]
+            futures = {
+                st: pool.submit(inherit(fn_)) for st, fn_ in publishes.items()
+            }
+        # in stage order, so a failure is recorded at the lowest
+        # failed stage
+        segs: dict[int, str | None] = {}  # stage -> segment it published
+        for stage_at, fut in futures.items():
+            segs[stage_at] = fut.result()
         survivors.unpersist()
     except Exception:
         failed = _ledger_row(
-            spec,
-            stage_at,
-            INC_STAGES[stage_at - 1],
-            "failed",
-            None,
-            None,
-            None,
+            run_key, spec, stage_at, INC_STAGES[stage_at - 1], "failed", None
         )
-        failed["run_id"] = run_key
         catalog.insert(LEDGER_TABLE, [failed])
         raise
 
     counts = [n0, n1, n2, n3, n4, n5, n5]
     rows = [
         _ledger_row(
-            spec,
-            i,
-            name,
-            "succeeded",
-            counts[i - 1],
-            counts[i],
+            run_key, spec, i, name, "succeeded", counts[i - 1], counts[i],
             segs.get(i),
         )
         for i, name in enumerate(INC_STAGES, start=1)
     ]
-    for r in rows:
-        r["run_id"] = run_key
     catalog.insert(LEDGER_TABLE, rows)
     return {
         "run_key": run_key,

@@ -1151,15 +1151,12 @@ def pq_topk(
     cosine_topk only depends on shortlist coverage."""
     import numpy as np
 
-    # r15 (guide §2.6 overlap independent jobs): the two bounded
-    # driver collects — the codebook TRAINING sample and the QUERY
-    # vectors for the ADC LUTs — read disjoint model-state slices and
-    # neither depends on the other, but they ran back-to-back, each
-    # paying its own plan + driver round trip serially (profiled r14:
-    # ~2.1 s wall on 0.5 s of job time, the gap being sequential
-    # driver dispatch).  Submit both from a 2-thread pool so the
-    # second job's tasks back-fill the first's tail; results and
-    # bounds are unchanged (same plans, same collects).
+    # The two bounded driver collects — the codebook TRAINING sample
+    # and the QUERY vectors for the ADC LUTs — read disjoint
+    # model-state slices and neither depends on the other, so the
+    # query collect runs on a pool thread (carrying the caller's job
+    # group) while the codebooks train: the second job's tasks
+    # back-fill the first's tail.
     def _collect_queries():
         # query vectors come to the driver to build the ADC LUTs — a
         # bounded probe-set path, guarded like max_train: an unbounded
@@ -1177,8 +1174,12 @@ def pq_topk(
     if codebooks is None:
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_q = pool.submit(_collect_queries)
+            fut_q = pool.submit(
+                inheritable_thread_target(df.sparkSession)(_collect_queries)
+            )
             books = train_pq_codebooks(
                 df, m=m, k=n_cells, dim=dim, id_col=id_col, vec_col=vec_col
             )

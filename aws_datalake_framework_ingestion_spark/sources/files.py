@@ -24,6 +24,27 @@ def _fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(hconf), jvm
 
 
+def holds_table(spark: SparkSession, path: str) -> bool:
+    """Whether directory ``path`` holds a parquet table Spark's reader
+    can read: a ``.parquet`` file at its top level.  One level only,
+    and names starting with ``_`` or ``.`` are skipped, as the reader
+    skips them — a crashed write's ``_temporary/`` tree or a
+    dot-prefixed staging file holds no table."""
+    fs, jvm = _fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.exists(p) or not fs.getFileStatus(p).isDirectory():
+        return False
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if (
+            st.isFile()
+            and name.endswith(".parquet")
+            and not name.startswith(("_", "."))
+        ):
+            return True
+    return False
+
+
 def list_prefix(spark: SparkSession, prefix: str) -> list[str]:
     """S5: enumerate files under a prefix (reference
     bucket.objects.filter(Prefix=...), :204)."""

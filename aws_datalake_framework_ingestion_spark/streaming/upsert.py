@@ -51,19 +51,10 @@ def upsert_batch(
     # publishes with (scheme-agnostic: file://, hdfs://, s3a://) — a
     # local os.path.isdir here would always be False on remote stores,
     # silently replacing the table with the current batch alone
-    from ..sources.files import _fs, staged_swap
+    from ..sources.files import holds_table, staged_swap
     from ..sources.versioned import sized_for_publish
 
-    fs, jvm = _fs(spark, table_dir)
-    jdir = jvm.org.apache.hadoop.fs.Path(table_dir)
-    has_table = False
-    if fs.exists(jdir):
-        it = fs.listFiles(jdir, False)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                has_table = True
-                break
-    if has_table:
+    if holds_table(spark, table_dir):
         base = spark.read.parquet(table_dir)
         merged = base.join(
             last.select(*key_cols), key_cols, "left_anti"

@@ -323,6 +323,33 @@ def test_vacuum_orphans_reaps_only_stale_siblings(spark, tmp_path):
     assert spark.read.parquet(t).count() == 100  # table untouched
 
 
+def test_crashed_write_remnant_is_not_a_table(spark, tmp_path):
+    """A table directory holding only a crashed write's ``_temporary``
+    tree (or a dot-prefixed staging file) holds no readable table:
+    ``exists`` is False, so ``create_all`` lays the table down and it
+    reads, instead of every read failing to infer a schema."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_datalake_framework_ingestion_spark.sources.files import (
+        holds_table,
+    )
+
+    cat = Catalog(spark, str(tmp_path / "catalog"))
+    d = tmp_path / "catalog" / "run_ledger"
+    task = d / "_temporary" / "0" / "task_0"
+    os.makedirs(task)
+    pq.write_table(pa.table({"x": [1]}), str(task / "part-0.parquet"))
+    pq.write_table(pa.table({"x": [1]}), str(d / ".part-1.parquet"))
+    assert not holds_table(spark, str(d))
+    assert not cat.exists("run_ledger")
+    cat.create_all()
+    assert cat.exists("run_ledger")
+    assert cat.read("run_ledger").count() == 0
+
+
 def test_single_file_format_roundtrips(spark, tmp_path):
     """K1 single-artifact mode must round-trip losslessly through every
     bundled format (csv needs schema re-application; json/orc/parquet

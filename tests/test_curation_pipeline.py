@@ -423,6 +423,60 @@ def test_incremental_registry_drift_after_crash_raises(spark, tmp_path):
     assert not res["replayed"]
 
 
+def test_incremental_corpus_drift_after_crash_raises(spark, tmp_path):
+    """A corpus segment left by a crashed attempt is checked on replay
+    by content, not by row count alone: one doc_id changed under the
+    same row count must raise, and the failure is ledgered at the
+    publish stage."""
+    import shutil
+    import unittest.mock as _mock
+
+    docs = _docs(spark)
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    spec = _inc_spec("i14")
+    store = str(tmp_path / "store")
+    b0 = docs.where(F.col("doc_id") % 3 == 0)
+
+    real = C.Catalog.insert
+
+    class Boom(RuntimeError):
+        pass
+
+    def exploding_insert(self, table, rows):
+        if table == C.LEDGER_TABLE and rows and rows[0]["run_id"].startswith(
+            "i14@"
+        ) and rows[0]["status"] == "succeeded":
+            raise Boom("die before ledger commit")
+        return real(self, table, rows)
+
+    with _mock.patch.object(Catalog, "insert", exploding_insert):
+        with pytest.raises(Boom):
+            C.run_curation_incremental(cat, spec, b0, store, 0)
+    seg = f"{store}/corpus/v=00001"
+    rows = spark.read.parquet(seg)
+    n = rows.count()
+    victim = rows.agg(F.min("doc_id")).first()[0]
+    doc_id = F.col("doc_id")
+    changed = rows.withColumn(
+        "doc_id", F.when(doc_id == victim, -doc_id - 1).otherwise(doc_id)
+    )
+    tmp = str(tmp_path / "rewritten")
+    changed.write.parquet(tmp)
+    shutil.rmtree(seg)
+    shutil.move(tmp, seg)
+    again = spark.read.parquet(seg)
+    assert again.count() == n
+    assert again.where(doc_id == victim).count() == 0
+    with pytest.raises(RuntimeError, match="changed under a committed"):
+        C.run_curation_incremental(cat, spec, b0, store, 0)
+    failed = (
+        cat.read(C.LEDGER_TABLE)
+        .where((F.col("run_id") == "i14@b000") & (F.col("status") == "failed"))
+        .collect()
+    )
+    assert [r["name"] for r in failed] == ["publish"]
+
+
 def test_incremental_stores_survive_compaction(spark, tmp_path):
     """The incremental pipeline's append-only stores (sig registry,
     probe registry, curated corpus) accrete one segment per batch —
@@ -593,8 +647,6 @@ def test_incremental_warm_batch_job_count(spark, tmp_path):
             cat, spec, docs.where(F.col("doc_id") % 3 == b), store, b
         )
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
     group = f"curate_batch_{os.getpid()}"
     sc.setJobGroup(group, "one warm incremental curation batch")
     try:
@@ -603,11 +655,8 @@ def test_incremental_warm_batch_job_count(spark, tmp_path):
         )
     finally:
         sc.setJobGroup("", "")
-    # the store publishes run on pool threads, which do not inherit
-    # the job group: their jobs are the new ungrouped ones
-    n_jobs = len(tracker.getJobIdsForGroup(group)) + len(
-        set(tracker.getJobIdsForGroup(None)) - ungrouped
-    )
+    # the store publishes run on pool threads that carry the group
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert not res["replayed"]
     assert n_jobs == CURATE_BATCH_JOBS, n_jobs
 

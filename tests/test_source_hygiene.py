@@ -262,3 +262,106 @@ def test_collect_guard_has_teeth():
 
     V().visit(tree)
     assert V.found
+
+
+# --------------------------------------------------------------------
+# Pool-thread job attribution: under PySpark's pinned-thread mode a
+# pool thread inherits none of the caller's local properties, so jobs
+# it launches carry no job group and escape every per-group job count
+# (the construction pins, CURATE_BATCH_JOBS).  Every callable handed
+# to an executor must be wrapped by ``inheritable_thread_target``.
+# --------------------------------------------------------------------
+
+_WRAPPER = "inheritable_thread_target"
+
+
+def _mentions(node: ast.AST, names: set[str]) -> bool:
+    return any(
+        (isinstance(n, ast.Name) and n.id in names)
+        or (isinstance(n, ast.Attribute) and n.attr in names)
+        for n in ast.walk(node)
+    )
+
+
+def _unwrapped_pool_submits(tree: ast.Module) -> list[int]:
+    """Line numbers of ``.submit``/``.map`` calls on an executor (a name
+    bound to a ``...Executor(...)`` call, by ``with ... as`` or by
+    assignment) whose callable is not wrapped by
+    ``inheritable_thread_target`` — directly, or through a name bound to
+    ``inheritable_thread_target(...)``."""
+    pools: set[str] = set()
+    wrappers = {_WRAPPER}
+
+    def _is_executor(call: ast.AST) -> bool:
+        if not isinstance(call, ast.Call):
+            return False
+        f = call.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+        return name.endswith("Executor")
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.withitem) and _is_executor(node.context_expr):
+            if isinstance(node.optional_vars, ast.Name):
+                pools.add(node.optional_vars.id)
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if not isinstance(t, ast.Name):
+                    continue
+                if _is_executor(node.value):
+                    pools.add(t.id)
+                elif _mentions(node.value, {_WRAPPER}):
+                    wrappers.add(t.id)
+    out = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("submit", "map")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in pools
+        ):
+            continue
+        fn = node.args[0] if node.args else None
+        if not (isinstance(fn, ast.Call) and _mentions(fn.func, wrappers)):
+            out.append(node.lineno)
+    return sorted(out)
+
+
+def test_pool_callables_inherit_the_job_group():
+    offenders, n_submits = [], 0
+    for path in _module_files():
+        src = path.read_text()
+        n_submits += src.count(".submit(")
+        for line in _unwrapped_pool_submits(ast.parse(src)):
+            offenders.append(f"{path}:{line}")
+    assert n_submits, "no executor submit in the package — scanner stale?"
+    assert not offenders, (
+        "pool callables without inheritable_thread_target (their jobs "
+        f"lose the caller's job group): {offenders}"
+    )
+
+
+def test_pool_guard_has_teeth():
+    """The guard must fire on a planted plain submit and map, and pass
+    both wrapped forms."""
+    planted = ast.parse(
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "def f(spark, g, xs):\n"
+        "    with ThreadPoolExecutor(2) as pool:\n"
+        "        a = pool.submit(g)\n"
+        "        b = list(pool.map(g, xs))\n"
+        "    ex = ThreadPoolExecutor(2)\n"
+        "    ex.submit(lambda: g(1))\n"
+    )
+    assert _unwrapped_pool_submits(planted) == [4, 5, 7]
+    wrapped = ast.parse(
+        "from concurrent.futures import ThreadPoolExecutor\n"
+        "from pyspark import inheritable_thread_target\n"
+        "def f(spark, g, xs, series):\n"
+        "    inherit = inheritable_thread_target(spark)\n"
+        "    with ThreadPoolExecutor(2) as pool:\n"
+        "        a = pool.submit(inheritable_thread_target(spark)(g))\n"
+        "        b = list(pool.map(inherit(g), xs))\n"
+        "    return series.map(len)\n"
+    )
+    assert _unwrapped_pool_submits(wrapped) == []
